@@ -19,8 +19,8 @@ Layout
                   spans/SemDeDup), similarity & ANN (LSH/IVF/k-means/
                   PCA/JL), corpus rules (Gopher, packing, mixing,
                   sampling, BM25, LM perplexity, OOV), tokenizers
-                  (BPE), classifier (hashed logreg), multimodal codecs
-                  (PNG/JPEG/GIF/BMP/TIFF/WAV/ADPCM/FLAC/MJPEG-AVI)
+                  (BPE), classifier (hashed logreg), multimodal binary
+                  columns
 - ``streaming``   Structured Streaming ingestion of event streams,
                   exactly-once commit-log sink
 """

@@ -29,8 +29,7 @@ what a training-data pipeline actually filters and samples on is the
 METADATA — duration, bitrate, sample rate, channel layout — and that
 parse is pure frame-header arithmetic (ISO 11172-3 §2.4.1), fully
 REAL here: ID3v2 skip, frame walk (so VBR duration is exact, no Xing
-header trust), MPEG-1/2/2.5 and Layer I/II/III tables. Lossless
-audio decode lives in `flac.py`/`wav.py` (bit-exact, property-tested).
+header trust), MPEG-1/2/2.5 and Layer I/II/III tables.
 """
 
 from __future__ import annotations

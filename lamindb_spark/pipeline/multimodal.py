@@ -1,23 +1,15 @@
 """Multimodal payload columns: image/audio/video as opaque binary +
-typed metadata, processed with Arrow-batched pandas iterators.
+typed metadata.
 
-Design (BASELINE.json north star): media cells are ``binary`` columns
-with a sidecar metadata struct; decode / feature-extraction / resize /
-frame-sampling run as ``mapInPandas`` stages — per-partition Arrow
-batches, so bytes move JVM→Python once per batch, never per row.
-Decoders dispatch per format, and each modality has a REAL pure-
-python/numpy codec path tested on actual pixels/samples/frames: PNG
-(``png.py``), baseline JPEG (``jpeg.py``), GIF (``gif.py``), BMP
-(``bmp.py``) and uncompressed TIFF (``tiff.py``) for images, PCM,
-G.711 mu-law/A-law and IMA ADPCM WAV (``wav.py``) plus lossless FLAC
-(``flac.py``) for audio, MJPEG-AVI (``avi.py``) for video; mp3
-METADATA (exact VBR duration/bitrate/layout) parses real via
-``mp3.py``. Formats that require a codec library (webp, compressed
-TIFF, mp3/ogg sample decode, inter-frame video like H.264) fall back
-to the declared deterministic stub, so
-the Spark-side plumbing — schema, batching, partition sizing — is
-exercised end-to-end either way, and swapping in another real codec
-is a one-function change.
+Media cells are ``binary`` columns next to small metadata columns
+(``MEDIA_SCHEMA``), as lamindb stores media: bytes plus registry
+metadata, never decoded by the engine. :func:`media_from_binary_files`
+ingests files, :func:`sample_frames` plans video frame offsets from the
+duration metadata, and :func:`extract_features` featurizes rows in a
+``mapInPandas`` stage — per-partition Arrow batches, so bytes move
+JVM→Python once per batch, never per row. No codec ships here: each
+row goes through the deterministic :func:`_fake_decode` stub unless a
+decoder for its ``kind`` is registered in :data:`DECODERS`.
 
 At 100 TB: binary columns dominate row size → partition by
 ``bytes-per-partition`` not rows (``repartitionByRange`` on a size
@@ -73,93 +65,26 @@ FEATURE_SCHEMA = StructType(
 def _fake_decode(content: bytes) -> list[float]:
     """STUB decoder: deterministic pseudo-pixels from the byte stream.
 
-    Fallback for formats whose codecs (PIL/libav/soundfile) don't ship
-    in this environment — same signature: bytes in, float feature
-    vector out. PNG images take the REAL decode path below.
+    Used for every ``kind`` without a registered decoder — same
+    signature as a real one: bytes in, float feature vector out.
     """
     if content is None:
         return []
     return [b / 255.0 for b in content[:256]]
 
 
-def _decode_image(content: bytes) -> list[float]:
-    """Image decode: REAL pure-python codecs for PNG (``png.py``),
-    baseline JPEG (``jpeg.py``), GIF (``gif.py``), uncompressed BMP
-    (``bmp.py``) and baseline TIFF (``tiff.py``) payloads — actual
-    pixels, normalized to [0, 1] — falling back to the declared stub
-    only for formats that need codec libs (webp, compressed TIFF)."""
-    from .bmp import decode_bmp, is_bmp
-    from .gif import decode_gif, is_gif
-    from .jpeg import decode_jpeg, is_jpeg
-    from .png import PNG_SIG, decode_png
-    from .tiff import decode_tiff, is_tiff
-
-    if content and bytes(content[:8]) == PNG_SIG:
-        arr, _w, _h, _c = decode_png(bytes(content))
-        return (arr.astype("float64") / 255.0).ravel().tolist()
-    if content and is_jpeg(bytes(content)):
-        arr, _w, _h, _c = decode_jpeg(bytes(content))
-        return (arr.astype("float64") / 255.0).ravel().tolist()
-    if content and is_gif(bytes(content)):
-        arr, _w, _h, _c = decode_gif(bytes(content))
-        return (arr.astype("float64") / 255.0).ravel().tolist()
-    if content and is_bmp(bytes(content)):
-        arr, _w, _h, _c = decode_bmp(bytes(content))
-        return (arr.astype("float64") / 255.0).ravel().tolist()
-    if content and is_tiff(bytes(content)):
-        try:
-            arr, _w, _h, _c = decode_tiff(bytes(content))
-        except ValueError:  # compressed/tiled variants stay stubbed
-            return _fake_decode(content)
-        return (arr.astype("float64") / 255.0).ravel().tolist()
-    return _fake_decode(content)
+# Decoder hook: ``kind`` → ``bytes -> list[float]``. Empty by default;
+# register a real codec here (e.g. one backed by PIL) to replace the stub.
+DECODERS: dict[str, Callable[[bytes], list[float]]] = {}
 
 
-def _decode_audio(content: bytes) -> list[float]:
-    """Audio decode: REAL pure-python decoders for RIFF/WAVE (PCM,
-    G.711, IMA ADPCM — ``wav.py``) and FLAC (all subframe types —
-    ``flac.py``) payloads — actual samples in [-1, 1], channels
-    interleaved — falling back to the declared stub only for formats
-    that need codec libs (mp3/ogg sample decode; mp3 METADATA —
-    duration/bitrate/layout — parses real via ``mp3.py``)."""
-    from .flac import decode_flac, is_flac
-    from .wav import decode_wav, is_wav
-
-    if content and is_wav(bytes(content)):
-        samples, _rate = decode_wav(bytes(content))
-        return samples.ravel().tolist()
-    if content and is_flac(bytes(content)):
-        pcm, _rate, bps = decode_flac(bytes(content))
-        return (pcm.astype("float64") / float(1 << (bps - 1))).ravel().tolist()
-    return _fake_decode(content)
-
-
-def _decode_video(content: bytes) -> list[float]:
-    """Video decode: REAL MJPEG-in-AVI path (``avi.py`` container
-    parse + ``jpeg.py`` per-frame decode) — features come from the
-    first frame's actual pixels; inter-frame codecs (H.264 etc.) fall
-    back to the declared stub (they need a codec library)."""
-    from .avi import decode_avi, is_avi
-
-    if content and is_avi(bytes(content)):
-        v = decode_avi(bytes(content))
-        return (v.frame(0).astype("float64") / 255.0).ravel().tolist()
-    return _fake_decode(content)
-
-
-DECODERS: dict[str, Callable[[bytes], list[float]]] = {
-    "image": _decode_image,
-    "audio": _decode_audio,
-    "video": _decode_video,
-}
-
-
-def extract_features(media: DataFrame, batch_size: int = 64) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode + featurize media rows via ``mapInPandas``.
 
-    One Python worker per partition, Arrow batches of ``batch_size``
-    rows (set small — media cells are megabytes each; cap with
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``).
+    One Python worker per partition; the session's
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` sizes the Arrow
+    batches (media cells are megabytes each — lower it in the session
+    for large payloads).
     """
 
     def _process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -183,17 +108,13 @@ def extract_features(media: DataFrame, batch_size: int = 64) -> DataFrame:
                 )
             yield pd.DataFrame(out)
 
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
     return media.mapInPandas(_process, FEATURE_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame-sampling PLAN for video rows: one output row per sampled
     timestamp from the duration metadata — pure-DataFrame explode, so
-    the fan-out happens JVM-side and never touches the bytes. Feed its
-    offsets to :func:`extract_video_frames` for the real pixel
-    decode (MJPEG-AVI)."""
+    the fan-out happens JVM-side and never touches the bytes."""
     n_frames = (F.coalesce(F.col("duration_ms"), F.lit(0)) / every_ms).cast("int")
     return (
         media.filter(F.col("kind") == "video")
@@ -224,196 +145,3 @@ def media_from_binary_files(spark, path_glob: str, kind: str) -> DataFrame:
         F.lit(None).cast("int").alias("height"),
         F.lit(None).cast("long").alias("duration_ms"),
     )
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("content", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-    ]
-)
-
-
-def resize_images(media: DataFrame, width: int, height: int, batch_size: int = 64) -> DataFrame:
-    """Resize stage for image rows via ``mapInPandas`` — identical
-    batch shape to :func:`extract_features`.
-
-    PNG, GIF and BMP payloads take the REAL kernel: decode →
-    nearest-neighbor resize → re-encode in the same format (``png.py``
-    / ``gif.py`` / ``bmp.py``, pure python; GIF resize keeps the
-    source palette since nearest-neighbor only reuses existing
-    pixels). Other formats fall back to the declared byte-truncate
-    stub (their codecs don't ship here); the Spark-side
-    schema/batching/partitioning is identical either way.
-    """
-
-    def _process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .bmp import decode_bmp, encode_bmp, is_bmp
-        from .gif import decode_gif, encode_gif, is_gif
-        from .png import PNG_SIG, decode_png, encode_png, resize_nearest
-        from .tiff import decode_tiff, encode_tiff, is_tiff
-
-        target = width * height
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                content = row["content"] or b""
-                if bytes(content[:8]) == PNG_SIG:
-                    arr, _w, _h, _c = decode_png(bytes(content))
-                    resized = encode_png(resize_nearest(arr, width, height))
-                elif is_gif(bytes(content)):
-                    arr, _w, _h, _c = decode_gif(bytes(content))
-                    resized = encode_gif(resize_nearest(arr, width, height))
-                elif is_bmp(bytes(content)):
-                    arr, _w, _h, _c = decode_bmp(bytes(content))
-                    resized = encode_bmp(resize_nearest(arr, width, height))
-                elif is_tiff(bytes(content)):
-                    try:
-                        arr, _w, _h, _c = decode_tiff(bytes(content))
-                        resized = encode_tiff(resize_nearest(arr, width, height))
-                    except ValueError:  # compressed/tiled → stub
-                        resized = bytes(content[:target]).ljust(target, b"\0")
-                else:
-                    resized = bytes(content[:target]).ljust(target, b"\0")
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "content": resized,
-                        "width": width,
-                        "height": height,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
-    return media.filter(F.col("kind") == "image").mapInPandas(_process, RESIZED_SCHEMA)
-
-
-RESAMPLED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("content", BinaryType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_frames", LongType()),
-    ]
-)
-
-
-def resample_audio(media: DataFrame, sample_rate: int, batch_size: int = 64) -> DataFrame:
-    """Resample stage for audio rows via ``mapInPandas`` — identical
-    batch shape to :func:`resize_images`.
-
-    WAV and FLAC payloads take the REAL kernel: decode →
-    nearest-neighbor resample → re-encode in the SAME container
-    (``wav.py`` / ``flac.py``, stdlib only; the FLAC leg is
-    sample-exact end to end). Other formats fall back to the declared
-    passthrough stub (their codecs don't ship here); Spark-side
-    schema/batching is identical either way.
-    """
-
-    def _process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .flac import decode_flac, encode_flac, is_flac
-        from .wav import decode_wav, encode_wav, is_wav, resample_nearest
-
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                content = row["content"] or b""
-                if is_wav(bytes(content)):
-                    samples, src_rate = decode_wav(bytes(content))
-                    resampled = resample_nearest(samples, src_rate, sample_rate)
-                    body = encode_wav(resampled, sample_rate)
-                    n_frames = resampled.shape[0]
-                elif is_flac(bytes(content)):
-                    pcm, src_rate, bps = decode_flac(bytes(content))
-                    res = resample_nearest(
-                        pcm.astype("float64"), src_rate, sample_rate
-                    ).astype("int64")
-                    body = encode_flac(res, sample_rate, bps=bps)
-                    n_frames = res.shape[0]
-                else:
-                    body, n_frames = bytes(content), 0
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "content": body,
-                        "sample_rate": sample_rate,
-                        "n_frames": n_frames,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
-    return media.filter(F.col("kind") == "audio").mapInPandas(_process, RESAMPLED_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame_offset_ms", LongType()),
-        StructField("content", BinaryType()),  # PNG-encoded frame
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-    ]
-)
-
-
-def extract_video_frames(
-    media: DataFrame, every_ms: int = 1000, batch_size: int = 8
-) -> DataFrame:
-    """REAL frame extraction for video rows via ``mapInPandas``:
-    MJPEG-AVI payloads (``avi.py``) decode one JPEG frame per sampled
-    offset — only the sampled frames' bytes are touched — and each
-    frame re-encodes as PNG (lossless interchange). Non-AVI payloads
-    emit zero rows rather than fake pixels; :func:`sample_frames`
-    remains the metadata-only planning variant.
-
-    Scale shape: one video row fans out to its sampled frames inside
-    the Python stage (Arrow batches kept small — video cells are the
-    largest media payloads); at cluster scale repartition upstream by
-    size so one executor holds few videos at a time.
-    """
-
-    def _process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .avi import decode_avi, is_avi
-        from .png import encode_png
-
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                content = row["content"] or b""
-                if not is_avi(bytes(content)):
-                    continue
-                v = decode_avi(bytes(content))
-                seen = set()
-                for offset in range(0, max(v.duration_ms, 1), every_ms):
-                    idx, pixels = v.frame_at(offset)
-                    if idx in seen:
-                        continue
-                    seen.add(idx)
-                    out.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_idx": idx,
-                            "frame_offset_ms": offset,
-                            "content": encode_png(pixels),
-                            "width": v.width,
-                            "height": v.height,
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_idx", "frame_offset_ms",
-                    "content", "width", "height",
-                ],
-            )
-
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
-    return media.filter(F.col("kind") == "video").mapInPandas(_process, FRAME_SCHEMA)

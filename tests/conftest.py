@@ -12,7 +12,7 @@ _SLOWLIST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "slowlist.t
 
 def _slow_ids() -> set[tuple[str, str]]:
     """(file basename, test id incl. any param) pairs from
-    tests/slowlist.txt — the measured ≥11.5 s tests of the r16 full
+    tests/slowlist.txt — the measured ≥3 s tests of the r16 full
     run (852 tests, 56:29 wall). Matching on the basename keeps the
     list invocation-dir-independent."""
     out = set()

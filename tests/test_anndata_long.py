@@ -103,6 +103,45 @@ def test_zarr_round_trip(spark, tmp_path, fmt):
     assert entries == expect  # exact float64 round-trip, zeros dropped
 
 
+def test_zarr_forder_reads_like_c_order(tmp_path):
+    """An F-order zarr array reads identically to its C-order twin."""
+    import json
+    import os
+    import zlib as _zlib
+
+    from lamindb_spark.sources.anndata_io import _zarr_read_array
+
+    mat = np.arange(24, dtype=np.float64).reshape(4, 6)
+    for order in ("C", "F"):
+        d = str(tmp_path / f"z{order}")
+        os.makedirs(d)
+        with open(os.path.join(d, ".zarray"), "w") as fh:
+            json.dump(
+                {
+                    "zarr_format": 2,
+                    "shape": [4, 6],
+                    "chunks": [3, 4],
+                    "dtype": "<f8",
+                    "order": order,
+                    "fill_value": 0,
+                    "filters": None,
+                    "compressor": {"id": "zlib", "level": 1},
+                },
+                fh,
+            )
+        for ci in range(2):
+            for cj in range(2):
+                block = np.zeros((3, 4))
+                rows = slice(ci * 3, min(ci * 3 + 3, 4))
+                cols = slice(cj * 4, min(cj * 4 + 4, 6))
+                sub = mat[rows, cols]
+                block[: sub.shape[0], : sub.shape[1]] = sub
+                with open(os.path.join(d, f"{ci}.{cj}"), "wb") as fh:
+                    fh.write(_zlib.compress(np.asfortranarray(block).tobytes(order=order)))
+        got = _zarr_read_array(d)
+        assert (got == mat).all(), order
+
+
 def test_zarr_ingested_ops_compose(spark, tmp_path):
     """The ingested store supports the full AnnDataLong surface."""
     obs, var, x = _synthetic()

@@ -76,16 +76,19 @@ def test_empty_bucket_docs_still_count_in_n_docs(spark):
 
 
 def test_closure_unpinned_edges_match_pinned(spark, monkeypatch):
-    """r16 edge-pin size gate (VERDICT r15 watch item #4): with the
-    gate forced OFF (as at real scale, where the edge projection
-    exceeds the ceiling) both the driver-frontier scan mode and the
-    distributed BFS must return the same closure as the pinned forms."""
+    """r16 edge-pin size gate (VERDICT r15 watch item #4): the
+    driver-frontier scan mode and the distributed BFS each return the
+    driver-local closure with the edge pin forced ON (cache /
+    localCheckpoint of the edge projection — a spy proves it ran) and
+    forced OFF (as at real scale, where the projection exceeds the
+    ceiling — the spy proves it did not)."""
     from lamindb_spark.operators import graph as g
 
     edges = spark.createDataFrame(
         [(k, k // 2) for k in range(2, 200)], ["child_id", "parent_id"]
     )
     seeds = spark.createDataFrame([(150,), (151,)], ["id"])
+    df_cls = type(edges)
 
     def run():
         return {
@@ -95,11 +98,28 @@ def test_closure_unpinned_edges_match_pinned(spark, monkeypatch):
             ).collect()
         }
 
-    baseline = run()
-    monkeypatch.setattr(g, "_EDGE_PIN_MAX_BYTES", 0)
-    # broadcast scan mode, unpinned
+    # the columns of every frame cache()/localCheckpoint() ran on; the
+    # edge projection is the only one carrying both __s and __d
+    pins = {"cache": [], "localCheckpoint": []}
+    for method, calls in pins.items():
+        real = getattr(df_cls, method)
+
+        def wrapped(self, *a, _real=real, _calls=calls, **k):
+            _calls.append(self.columns)
+            return _real(self, *a, **k)
+
+        monkeypatch.setattr(df_cls, method, wrapped)
+
+    baseline = run()  # driver-local edge collect
+    assert baseline
     monkeypatch.setattr(g, "_closure_edges_local", lambda *a, **k: None)
-    assert run() == baseline
-    # distributed BFS fallback, unpinned
-    monkeypatch.setattr(g, "_closure_broadcast", lambda *a, **k: None)
-    assert run() == baseline
+    # broadcast scan mode pins with cache(); the distributed BFS
+    # (broadcast mode disabled) pins with localCheckpoint()
+    for mode, method in (("broadcast", "cache"), ("bfs", "localCheckpoint")):
+        if mode == "bfs":
+            monkeypatch.setattr(g, "_closure_broadcast", lambda *a, **k: None)
+        for pin in (True, False):
+            monkeypatch.setattr(g, "_edge_pin_ok", lambda e, _pin=pin: _pin)
+            pins[method].clear()
+            assert run() == baseline, (mode, pin)
+            assert (["__s", "__d"] in pins[method]) is pin, (mode, pin, pins[method])

@@ -88,35 +88,10 @@ def test_q_algebra_matches_python(spark, rows, a, b):
     assert got == want
 
 
-# ----------------------------------------------------- codec properties
+# --- vendored HDF5 round trip ------------------------------------------
 
 import numpy as np
 from hypothesis import HealthCheck
-
-
-@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(
-    h=st.integers(1, 40),
-    w=st.integers(1, 40),
-    ch=st.sampled_from([1, 3]),
-    quality=st.integers(60, 100),
-    seed=st.integers(0, 2**31),
-)
-def test_jpeg_round_trip_property(h, w, ch, quality, seed):
-    """decode(encode(x)) stays within the DCT-quantization error bound
-    for ANY dims/channels/quality — no crashes on edge sizes (1×1,
-    non-multiple-of-8, extreme aspect ratios)."""
-    from lamindb_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(seed)
-    # smooth-ish content (noise amplitudes bounded) so the error bound
-    # is meaningful at any quality
-    base = rng.integers(0, 256, (1, 1, ch))
-    arr = (base + rng.integers(-12, 13, (h, w, ch))).clip(0, 255).astype(np.uint8)
-    got, gw, gh, gc = decode_jpeg(encode_jpeg(arr, quality=quality))
-    assert (gw, gh, gc) == (w, h, ch)
-    err = np.abs(got.astype(int) - arr.astype(int))
-    assert err.max() <= 40 and err.mean() <= 12
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
@@ -141,206 +116,6 @@ def test_hdf5_round_trip_property(tmp_path_factory, shape, dtype, chunked, seed)
     got = open_h5(p)["d"].read()
     assert got.dtype == np.dtype(dtype)
     np.testing.assert_array_equal(got, arr)
-
-
-@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(
-    n_frames=st.integers(1, 6),
-    h=st.integers(8, 24),
-    w=st.integers(8, 24),
-    fps=st.sampled_from([5.0, 24.0, 30.0]),
-    seed=st.integers(0, 2**31),
-)
-def test_avi_round_trip_property(n_frames, h, w, fps, seed):
-    """MJPEG-AVI: any frame count/dims/fps round-trips with correct
-    metadata and frame recovery within JPEG tolerance."""
-    from lamindb_spark.pipeline.avi import decode_avi, encode_avi
-
-    rng = np.random.default_rng(seed)
-    base = rng.integers(0, 256, (1, 1, 3))
-    frames = [
-        (base + rng.integers(-10, 11, (h, w, 3))).clip(0, 255).astype(np.uint8)
-        for _ in range(n_frames)
-    ]
-    v = decode_avi(encode_avi(frames, fps=fps, quality=92))
-    assert (v.width, v.height, v.n_frames) == (w, h, n_frames)
-    assert abs(v.fps - fps) < 0.05
-    for t in range(n_frames):
-        err = np.abs(v.frame(t).astype(int) - frames[t].astype(int))
-        assert err.mean() <= 8
-
-
-@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(
-    h=st.integers(1, 48),
-    w=st.integers(1, 48),
-    n_colors=st.integers(1, 256),
-    interlace_height=st.booleans(),
-    seed=st.integers(0, 2**31),
-)
-def test_gif_round_trip_property(h, w, n_colors, interlace_height, seed):
-    """GIF decode(encode(x)) is LOSSLESS for any dims and palette size
-    up to the format's 256-color limit — exercises variable LZW code
-    widths, table resets, and 1-pixel edge sizes."""
-    from lamindb_spark.pipeline.gif import decode_gif, encode_gif
-
-    rng = np.random.default_rng(seed)
-    pal = rng.integers(0, 256, (n_colors, 3), dtype=np.uint8)
-    arr = pal[rng.integers(0, n_colors, (h, w))]
-    got, gw, gh, gc = decode_gif(encode_gif(arr))
-    assert (gw, gh, gc) == (w, h, 3)
-    assert (got == arr).all()
-
-
-def test_gif_decodes_interlaced():
-    """Hand-built interlaced GIF (same pixels, rows stored in 4-pass
-    order) decodes to the top-to-bottom image."""
-    from lamindb_spark.pipeline import gif as g
-
-    rng = np.random.default_rng(3)
-    pal = rng.integers(0, 256, (4, 3), dtype=np.uint8)
-    idx = rng.integers(0, 4, (10, 5)).astype(np.uint8)
-    # build a GIF by encoding non-interlaced, then rewrite the image
-    # descriptor flags + reorder rows into interlace pass order
-    import struct
-
-    order = (
-        list(range(0, 10, 8)) + list(range(4, 10, 8))
-        + list(range(2, 10, 4)) + list(range(1, 10, 2))
-    )
-    interlaced_rows = idx[order]
-    data = bytearray(g.encode_gif(pal[interlaced_rows]))
-    # image descriptor directly follows the 4-color global table
-    desc_at = 13 + 3 * 4
-    assert data[desc_at] == 0x2C
-    flags_at = desc_at + 9
-    data[flags_at] |= 0x40  # set interlace flag
-    got, _w, _h, _c = g.decode_gif(bytes(data))
-    assert (got == pal[idx]).all()
-
-
-@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(h=st.integers(1, 40), w=st.integers(1, 40), seed=st.integers(0, 2**31))
-def test_bmp_round_trip_property(h, w, seed):
-    """24-bit BMP decode(encode(x)) is lossless for any dims —
-    exercises 4-byte row padding at every width mod 4."""
-    from lamindb_spark.pipeline.bmp import decode_bmp, encode_bmp
-
-    rng = np.random.default_rng(seed)
-    arr = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    got, gw, gh, gc = decode_bmp(encode_bmp(arr))
-    assert (gw, gh, gc) == (w, h, 3)
-    assert (got == arr).all()
-
-
-@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(
-    n=st.integers(1, 3000),
-    n_ch=st.integers(1, 2),
-    rate=st.sampled_from([8000, 16000]),
-    law=st.sampled_from(["ulaw", "alaw"]),
-    seed=st.integers(0, 2**31),
-)
-def test_g711_round_trip_property(n, n_ch, rate, law, seed):
-    """G.711 decode(encode(x)) stays within the top-segment half-step
-    (~0.016 of full scale) for any signal, channel count, and law."""
-    from lamindb_spark.pipeline.wav import decode_wav, encode_wav_g711
-
-    rng = np.random.default_rng(seed)
-    sig = rng.uniform(-0.95, 0.95, (n, n_ch))
-    got, grate = decode_wav(encode_wav_g711(sig, rate, law))
-    assert grate == rate and got.shape == (n, n_ch)
-    assert np.abs(got - sig).max() < 0.017
-
-
-def test_g711_itu_spot_values():
-    """Canonical ITU expansion extremes and zero codes."""
-    from lamindb_spark.pipeline.wav import _alaw_decode_table, _ulaw_decode_table
-
-    u = _ulaw_decode_table()
-    assert u[0xFF] == 0 and u[0x7F] == 0
-    assert u[0x80] == 32124 and u[0x00] == -32124
-    a = _alaw_decode_table()
-    assert a[0xD5] == 8 and a[0x55] == -8
-    assert a.max() == 32256 and a.min() == -32256
-
-
-@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(
-    h=st.integers(1, 40),
-    w=st.integers(1, 40),
-    ch=st.sampled_from([1, 3]),
-    seed=st.integers(0, 2**31),
-)
-def test_tiff_round_trip_property(h, w, ch, seed):
-    """Baseline TIFF decode(encode(x)) is lossless for any dims and
-    1/3 channels."""
-    from lamindb_spark.pipeline.tiff import decode_tiff, encode_tiff
-
-    rng = np.random.default_rng(seed)
-    arr = rng.integers(0, 256, (h, w, ch), dtype=np.uint8)
-    got, gw, gh, gc = decode_tiff(encode_tiff(arr))
-    assert (gw, gh, gc) == (w, h, ch)
-    assert (got == arr).all()
-
-
-def test_tiff_decodes_big_endian_multi_strip():
-    """Hand-built MM-order TIFF with two strips and out-of-line
-    offset/count arrays decodes correctly."""
-    import struct
-
-    from lamindb_spark.pipeline.tiff import decode_tiff
-
-    rng = np.random.default_rng(3)
-    w, h = 5, 4
-    body = rng.integers(0, 256, (h, w), dtype=np.uint8)
-    strips = [body[:2].tobytes(), body[2:].tobytes()]
-    n = 8
-
-    def ent(tag, typ, cnt, val):
-        head = struct.pack(">HHI", tag, typ, cnt)
-        return head + (
-            struct.pack(">I", val) if typ == 4 else struct.pack(">HH", val, 0)
-        )
-
-    ifd_size = 2 + 12 * n + 4
-    so_off = 8 + ifd_size
-    sc_off = so_off + 8
-    data0 = sc_off + 8
-    data1 = data0 + len(strips[0])
-    ifd = struct.pack(">H", n)
-    ifd += ent(256, 4, 1, w) + ent(257, 4, 1, h) + ent(258, 3, 1, 8)
-    ifd += ent(259, 3, 1, 1) + ent(262, 3, 1, 1)
-    ifd += struct.pack(">HHI", 273, 4, 2) + struct.pack(">I", so_off)
-    ifd += ent(278, 4, 1, 2)
-    ifd += struct.pack(">HHI", 279, 4, 2) + struct.pack(">I", sc_off)
-    ifd += struct.pack(">I", 0)
-    blob = (
-        b"MM\x00*" + struct.pack(">I", 8) + ifd
-        + struct.pack(">II", data0, data1)
-        + struct.pack(">II", len(strips[0]), len(strips[1]))
-        + strips[0] + strips[1]
-    )
-    got, gw, gh, gc = decode_tiff(blob)
-    assert (gw, gh, gc) == (w, h, 1) and (got[:, :, 0] == body).all()
-
-
-def test_tiff_unsupported_compression_raises():
-    """JPEG-in-TIFF (compression 7) raises cleanly (declared out of
-    scope → the multimodal stage falls back to the stub, not a crash).
-    LZW/Deflate/PackBits became REAL in r7, so the guard now pins the
-    next genuinely unsupported scheme."""
-    import struct
-
-    from lamindb_spark.pipeline.tiff import decode_tiff, encode_tiff
-
-    blob = bytearray(encode_tiff(np.zeros((2, 2, 1), dtype=np.uint8)))
-    # compression entry is the 4th: flip its value to 7 (JPEG)
-    off = 8 + 2 + 12 * 3 + 8
-    assert struct.unpack("<H", blob[off - 8 : off - 6])[0] == 259
-    blob[off : off + 2] = struct.pack("<H", 7)
-    with pytest.raises(ValueError, match="compression"):
-        decode_tiff(bytes(blob))
 
 
 # --- corpus span dedup vs python model ---------------------------------
@@ -405,73 +180,6 @@ def test_bpe_train_property(spark, texts, n_merges):
 
     docs = literal_table(spark, list(enumerate(texts)), ["doc_id", "text"])
     assert bpe_train(docs, n_merges=n_merges) == _ref_train(texts, n_merges)
-
-
-# --- IMA ADPCM --------------------------------------------------------
-
-
-def test_ima_adpcm_known_block():
-    """Decode a hand-crafted block against hand-computed state-machine
-    values (step table walk done on paper, independent of the code)."""
-    import struct
-
-    import numpy as np
-
-    from lamindb_spark.pipeline.wav import decode_wav
-
-    # mono block: header pred=100 idx=0, nibbles 3,7,0,0,0,0,0,0
-    body = struct.pack("<hBx", 100, 0) + bytes([3 | (7 << 4), 0, 0, 0])
-    fmt_chunk = struct.pack("<HHIIHHHH", 0x11, 1, 8000, 8000, 8, 4, 2, 9)
-    out = b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-    out += b"data" + struct.pack("<I", len(body)) + body
-    wav = b"RIFF" + struct.pack("<I", 4 + len(out)) + b"WAVE" + out
-    samples, rate = decode_wav(wav)
-    assert rate == 8000
-    pcm = np.round(samples[:, 0] * 32768.0).astype(int).tolist()
-    # by hand: 100 | +4 (nib 3, step 7) | +11 (nib 7) -> idx 8 |
-    # +2 (nib 0, step 16) -> idx 7 | +1 (nib 0, step 14) -> idx 6
-    assert pcm[:5] == [100, 104, 115, 117, 118]
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    st.integers(min_value=120, max_value=600),
-    st.integers(min_value=1, max_value=2),
-    st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_ima_adpcm_round_trip_property(n, n_ch, seed):
-    import numpy as np
-
-    from lamindb_spark.pipeline.wav import decode_wav, encode_wav_ima
-
-    rng = np.random.default_rng(seed)
-    t = np.arange(n)[:, None] / 40.0
-    freqs = rng.uniform(0.5, 2.0, size=(1, n_ch))
-    sig = 0.6 * np.sin(2 * np.pi * freqs * t) + 0.02 * rng.standard_normal((n, n_ch))
-    sig = np.clip(sig, -0.999, 0.999)
-    wav = encode_wav_ima(sig, 8000, block_frames=505)
-    out, rate = decode_wav(wav)
-    assert rate == 8000
-    got = out[:n]
-    assert got.shape == (n, n_ch)
-    # lossy codec: judge reconstruction after the step-size adaptation
-    # warm-up (the first ~30 samples chase the signal from step 7)
-    err = np.sqrt(np.mean((got[30:] - sig[30:]) ** 2))
-    pwr = np.sqrt(np.mean(sig[30:] ** 2))
-    assert err < 0.25 * pwr, f"SNR too low: err={err}, pwr={pwr}"
-
-
-def test_ima_adpcm_decode_is_deterministic_and_padded():
-    import numpy as np
-
-    from lamindb_spark.pipeline.wav import decode_wav, encode_wav_ima
-
-    sig = np.linspace(-0.5, 0.5, 20)  # tail block gets padded
-    wav = encode_wav_ima(sig, 16000, block_frames=17)
-    a, _ = decode_wav(wav)
-    b, _ = decode_wav(wav)
-    assert np.array_equal(a, b)
-    assert len(a) >= 20
 
 
 # --- sampling quotas --------------------------------------------------
