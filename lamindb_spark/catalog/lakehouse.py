@@ -34,8 +34,12 @@ import shutil
 import uuid
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 import logging
 
@@ -141,6 +145,105 @@ def _group_feature_values(ann_rows) -> dict:
     return out
 
 
+#: A registry whose live files are all local and total at most this
+#: many bytes is read on the driver by ``Lakehouse._registry_rows``
+#: (pyarrow, no Spark job); a larger or remote one is scanned by Spark.
+_DRIVER_READ_MAX_BYTES = 64 << 20
+
+
+def _hidden_path(name: str) -> bool:
+    """Spark's file-index rule for names it never reads
+    (``InMemoryFileIndex.shouldFilterOutPathName``): ``.``-names and
+    ``_``-names, except ``_`` partition dirs such as ``__bucket=3``."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _visible_files(table_path: str) -> list[str]:
+    """The data files a Spark scan of ``table_path`` reads."""
+    out = []
+    for d, subdirs, files in os.walk(table_path):
+        subdirs[:] = sorted(s for s in subdirs if not _hidden_path(s))
+        out.extend(os.path.join(d, f) for f in sorted(files) if not _hidden_path(f))
+    return out
+
+
+def _parse_lookups(schema, lookups: dict[str, Any]) -> list[tuple[str, str, Any]]:
+    """``col=v`` / ``col__startswith=p`` / ``col__in=[...]`` →
+    (column, op, value) triples."""
+    out = []
+    for k, v in lookups.items():
+        col, sep, op = k.rpartition("__")
+        if not sep or op not in ("startswith", "in"):
+            col, op = k, "exact"
+        if col not in schema.names:
+            raise KeyError(f"unknown registry field {col!r}; known: {schema.names}")
+        out.append((col, op, v))
+    return out
+
+
+def _arrow_mask(column, op: str, value):
+    if op == "exact":
+        return pc.is_null(column) if value is None else pc.equal(column, value)
+    if op == "startswith":
+        return pc.starts_with(column, pattern=value)
+    return pc.is_in(column, value_set=pa.array(list(value), type=column.type))
+
+
+def _read_rows_local(schema, files: list[str], conds) -> list[Row]:
+    """Rows of ``files`` matching every condition, read with pyarrow —
+    the same rows, Row type and values a Spark ``collect()`` returns.
+    Each file's key columns are read and masked first; only files with
+    a match pay the full-row read. A column missing from a file reads
+    as null, as under ``spark.read.schema(...)``. ``pq.read_table``
+    and ``pyarrow.dataset`` stay unused: importing the latter costs
+    tens of MB of driver memory."""
+    rows: list[Row] = []
+    for path in files:
+        with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+            present = set(pf.schema_arrow.names)
+            n = pf.metadata.num_rows
+
+            def column(t, f):
+                if f.name in present:
+                    return t.column(f.name)
+                return pa.chunked_array([pa.nulls(n, to_arrow_type(f.dataType))])
+
+            mask = None
+            if conds:
+                keys = sorted({c for c, _op, _v in conds} & present)
+                kt = pf.read(columns=keys)
+                for col, op, value in conds:
+                    m = _arrow_mask(column(kt, schema[col]), op, value)
+                    mask = m if mask is None else pc.and_(mask, m)
+                if not pc.any(mask).as_py():
+                    continue
+            t = pf.read(columns=[f.name for f in schema.fields if f.name in present])
+            cols = []
+            for f in schema.fields:
+                c = column(t, f)
+                if mask is not None:
+                    c = c.filter(mask)
+                if pa.types.is_timestamp(c.type):
+                    c = c.cast(pa.timestamp("us")).cast(pa.int64())
+                cols.append(c.to_pylist())
+            rows.extend(schema.fromInternal(v) for v in zip(*cols))
+    return rows
+
+
+def _newest(rows, *cols: str):
+    """The first row that sorts highest on ``cols`` (default
+    ``created_at``), nulls lowest — ``orderBy(desc(...)).first()``
+    over already-collected rows; None when ``rows`` is empty."""
+    cols = cols or ("created_at",)
+    return max(
+        rows, key=lambda r: tuple((r[c] is not None, r[c]) for c in cols), default=None
+    )
+
+
 class Lakehouse:
     """SparkSession-scoped engine catalog (SURVEY §7.0 design stance)."""
 
@@ -225,6 +328,14 @@ class Lakehouse:
     # instead of the whole table. This is the plain-parquet shape of a
     # table format's partition-scoped MERGE; on a cluster the bucket
     # column doubles as a co-location key.
+    #
+    # Point lookups (``_registry_rows``: get, dedup/family/storage
+    # probes, describe, open) run no Spark job: they take the live
+    # file list (a hidden-path-aware walk here, the commit-log
+    # snapshot on that tier) and read it on the driver with pyarrow,
+    # key columns first. Nothing is cached, so a read always sees the
+    # latest commit. Only a registry over ``_DRIVER_READ_MAX_BYTES`` or
+    # with remote files goes back to a Spark scan of the same list.
 
     #: id-hash fan-out per registry. 16 keeps small lakes readable;
     #: the layout supports any value — changing it only requires one
@@ -421,6 +532,34 @@ class Lakehouse:
             return self.spark.createDataFrame([], REGISTRY_SCHEMAS[name])
         df = self.spark.read.schema(REGISTRY_SCHEMAS[name]).parquet(self._table_path(name))
         return df.drop("__bucket")
+
+    def _registry_rows(self, registry: str, /, **lookups: Any) -> list[Row]:
+        """The rows ``read_raw(registry).filter(...).collect()`` returns,
+        for ``col=v`` / ``col__startswith=p`` / ``col__in=[...]``
+        lookups (ANDed; no branch filter). Reads the live files on the
+        driver when they are local and small (see the registry-io
+        notes above), else scans them with Spark. Unlike ``read_raw``
+        it never records a rewrite snapshot (``_cl_read_files``)."""
+        schema = REGISTRY_SCHEMAS[registry]
+        conds = _parse_lookups(schema, lookups)
+        files = self._cl_files(registry) if self._use_commitlog else _visible_files(
+            self._table_path(registry)
+        )
+        if not files:
+            return []
+        if not any(is_remote_scheme(p) for p in files):
+            files = [_local_path(p) for p in files]
+            if sum(os.path.getsize(p) for p in files) <= _DRIVER_READ_MAX_BYTES:
+                return _read_rows_local(schema, files, conds)
+        df = self.spark.read.schema(schema).parquet(*files).select(*schema.names)
+        for col, op, value in conds:
+            if op == "in":
+                df = self._filter_in(df, F.col(col), value)
+            elif op == "startswith":
+                df = df.filter(F.col(col).startswith(value))
+            else:
+                df = df.filter(F.col(col).isNull() if value is None else F.col(col) == value)
+        return df.collect()
 
     def read(self, name: str) -> DataFrame:
         """Registry scan with the default branch predicate injected
@@ -704,10 +843,10 @@ class Lakehouse:
         with fresh id/uid. Returns the saved rows (with ids).
 
         Scale shape (anti-join MERGE): the existing registry is NEVER
-        collected to the driver — uid classification is a semi-join of
-        ``existing`` against the batch's uids, collecting at most
-        ``len(rows)`` (id, uid) pairs; inserts are an O(batch) parquet
-        append; only matched updates pay a join-based rewrite."""
+        collected to the driver — uid classification (``_rows_by_uid``)
+        returns only the stored rows of the batch's uids; inserts are
+        an O(batch) parquet append; only matched updates pay a
+        join-based rewrite."""
         now = _now()
         # Django-style field validation (docs/faq/validate-fields.md):
         # caller-supplied values only — merged/stored values were
@@ -807,7 +946,7 @@ class Lakehouse:
     # ---------------------------------------------------------- artifacts
 
     def _resolve_storage_root(self) -> tuple[int, str]:
-        row = self.read_raw("storage").orderBy(F.length("root").desc()).first()
+        row = max(self._registry_rows("storage"), key=lambda r: len(r["root"]))
         return int(row["id"]), row["root"]
 
     def _storage_for_path(
@@ -826,11 +965,8 @@ class Lakehouse:
         apath = (
             path if is_remote_scheme(path) else os.path.abspath(_local_path(path))
         )
-        rows = (
-            self.read_raw("storage")
-            .orderBy(F.length("root").desc())
-            .select("id", "root")
-            .collect()
+        rows = sorted(
+            self._registry_rows("storage"), key=lambda r: len(r["root"]), reverse=True
         )
         for r in rows:
             aroot = (
@@ -912,7 +1048,6 @@ class Lakehouse:
             content_hash = None if skip_hash else store.md5(path)
             size, n_files = store.size(path), None
             suffix = os.path.splitext(path)[1]
-        arts = self.read_raw("artifact")
         # dedup scope (reference get_stat_or_artifact, artifact.py:454
         # ~Q(branch_id=-1)): ALL non-trash branches — the same content
         # saved on two sibling work branches returns the existing row
@@ -928,15 +1063,18 @@ class Lakehouse:
         # (artifact.py:421-424, `n_files is None and size == 0`).
         skip_hash_lookup = skip_hash or (n_files is None and size == 0)
         if not skip_hash_lookup:
-            same_hash = arts.filter(
-                (F.col("hash") == content_hash)
-                & (F.col("branch_id") != TRASH_BRANCH_ID)
-            ).orderBy(F.desc("created_at"))
-            dup = same_hash.filter(
-                F.col("branch_id").isin(self.current_branch_id, MAIN_BRANCH_ID)
-            ).first()
-            if dup is None:
-                dup = same_hash.first()
+            same_hash = [
+                r
+                for r in self._registry_rows("artifact", hash=content_hash)
+                if r["branch_id"] != TRASH_BRANCH_ID
+            ]
+            dup = _newest(
+                [
+                    r
+                    for r in same_hash
+                    if r["branch_id"] in (self.current_branch_id, MAIN_BRANCH_ID)
+                ]
+            ) or _newest(same_hash)
             if dup is not None:
                 return dup.asDict()
 
@@ -982,11 +1120,11 @@ class Lakehouse:
                 else:
                     store.copy_file(path, target)
         family = (
-            arts.filter(
-                (F.col("key") == key) & (F.col("branch_id") == self.current_branch_id)
+            _newest(
+                self._registry_rows(
+                    "artifact", key=key, branch_id=self.current_branch_id
+                )
             )
-            .orderBy(F.desc("created_at"))
-            .first()
             if key is not None
             else None
         )
@@ -1330,9 +1468,7 @@ class Lakehouse:
         path resolution, ``artifact_set.py:382-441``)."""
         if isinstance(artifact, Row):
             artifact = artifact.asDict()
-        storage = (
-            self.read_raw("storage").filter(F.col("id") == artifact["storage_id"]).first()
-        )
+        storage = self._registry_rows("storage", id=artifact["storage_id"])[0]
         return f"{storage['root']}/{artifact['key']}"
 
     def _should_track_input(self, is_run_input: bool | None) -> bool:
@@ -1344,21 +1480,22 @@ class Lakehouse:
             is_run_input = self.track_run_inputs
         return bool(is_run_input) and self.current_run_id is not None
 
+    def _visible_artifacts(self, uid_or_key: str, **lookups: Any) -> tuple[list, list]:
+        """(exact uid-or-key matches, uid-prefix matches) among the
+        artifacts the current branch sees (``read`` scope)."""
+        scope = dict(lookups, branch_id__in=[self.current_branch_id, MAIN_BRANCH_ID])
+        by_uid = self._registry_rows("artifact", uid__startswith=uid_or_key, **scope)
+        exact = [r for r in by_uid if r["uid"] == uid_or_key]
+        exact += self._registry_rows("artifact", key=uid_or_key, **scope)
+        return exact, by_uid
+
     def _resolve_artifact_row(self, uid_or_key: str):
         """Latest artifact row by exact uid/key, then uid prefix.
         EXACT matches take strict priority: a uid-PREFIX match
         competing in the same orderBy let a random uid starting with
         someone's short key hijack the lookup (review finding)."""
-        arts = self.read("artifact").filter(F.col("is_latest"))
-        hit = arts.filter(
-            (F.col("uid") == uid_or_key) | (F.col("key") == uid_or_key)
-        ).orderBy(F.desc("created_at")).first()
-        if hit is None:
-            hit = (
-                arts.filter(F.col("uid").startswith(uid_or_key))
-                .orderBy(F.desc("created_at"))
-                .first()
-            )
+        exact, by_prefix = self._visible_artifacts(uid_or_key, is_latest=True)
+        hit = _newest(exact) or _newest(by_prefix)
         if hit is None:
             raise KeyError(f"no artifact with uid/key {uid_or_key!r}")
         return hit
@@ -1428,30 +1565,23 @@ class Lakehouse:
         """Related-data describe as one JSON document (reference
         ``get_artifact_or_run_with_related`` + JSONObject/ArrayAgg,
         ``_django.py:81``; X10): the artifact row plus its storage,
-        producing run/transform, and annotation values, assembled with
-        ``to_json(struct(...))`` + ``collect_list`` in a single plan."""
-        arts = self.read("artifact")
-        hit = arts.filter(
-            (F.col("uid") == uid_or_key) | (F.col("key") == uid_or_key)
-        ).orderBy(F.desc("created_at")).first()
+        producing run/transform, and annotation values, assembled from
+        driver-side point lookups (``_registry_rows``, no Spark job)."""
+        hit = _newest(self._visible_artifacts(uid_or_key)[0])
         if hit is None:
             raise KeyError(f"no artifact with uid/key {uid_or_key!r}")
-        storage = self.read_raw("storage").filter(F.col("id") == hit["storage_id"]).first()
+
+        def first(name, **lookups):
+            rows = self._registry_rows(name, **lookups)
+            return rows[0] if rows else None
+
+        storage = first("storage", id=hit["storage_id"])
         run = tf = None
         if hit["run_id"] is not None:
-            run = self.read_raw("run").filter(F.col("id") == hit["run_id"]).first()
+            run = first("run", id=hit["run_id"])
             if run is not None:
-                tf = self.read_raw("transform").filter(
-                    F.col("id") == run["transform_id"]
-                ).first()
-        ann = (
-            self.read_raw("annotation")
-            .filter((F.col("entity_kind") == "artifact") & (F.col("entity_id") == hit["id"]))
-            .select("feature_name", "value_json")
-            .collect()
-            if self._exists("annotation")
-            else []
-        )
+                tf = first("transform", id=run["transform_id"])
+        ann = self._registry_rows("annotation", entity_kind="artifact", entity_id=hit["id"])
         import json as _json
 
         doc = {
@@ -1558,17 +1688,11 @@ class Lakehouse:
 
     def _rows_by_uid(self, registry: str, uids) -> dict[str, dict[str, Any]]:
         """Local rows keyed by uid (trash included — :meth:`save`'s
-        upsert classification) — bounded by the batch, semi-joined."""
+        upsert classification) — bounded by the batch."""
         uids = sorted(set(uids))
-        if not uids or not self._exists(registry):
+        if not uids:
             return {}
-        uid_df = self.spark.createDataFrame([(u,) for u in uids], "uid: string")
-        hits = (
-            self.read_raw(registry)
-            .join(F.broadcast(uid_df), "uid", "left_semi")
-            .collect()  # bounded by the batch, not the registry
-        )
-        return {r["uid"]: r.asDict() for r in hits}
+        return {r["uid"]: r.asDict() for r in self._registry_rows(registry, uid__in=uids)}
 
     def _reuse_or_restore_by_uid(
         self, registry: str, uids
@@ -2196,10 +2320,7 @@ class Lakehouse:
 
         suffixes = [
             r["uid"][len(stem):]
-            for r in self.read_raw(name)
-            .filter(F.col("uid").startswith(stem))
-            .select("uid")
-            .collect()
+            for r in self._registry_rows(name, uid__startswith=stem)
             if len(r["uid"]) > len(stem)
         ]
         if not suffixes:

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators.filters import LOOKUP_NAMES, Q, compile_lookup, split_lookup
 from ..operators.search import search as search_op
-from .schemas import MAIN_BRANCH_ID
+from .schemas import MAIN_BRANCH_ID, REGISTRY_SCHEMAS
 
 logger = logging.getLogger("lamindb_spark")
 
@@ -166,9 +166,21 @@ class QuerySet:
                  branch_filtered: bool = False, ordered: bool = False):
         self.lh = lakehouse
         self.registry = registry
-        self._df = df if df is not None else lakehouse.read_raw(registry)
+        self._plan = df  # None until a terminal op needs the scan
         self._branch_filtered = branch_filtered
         self._ordered = ordered
+
+    @property
+    def _df(self) -> DataFrame:
+        if self._plan is None:
+            self._plan = self.lh.read_raw(self.registry)
+        return self._plan
+
+    @property
+    def _fresh(self) -> bool:
+        """A bare ``QuerySet(lh, registry)``: no filter, order or scan
+        built yet, so point lookups can skip Spark."""
+        return self._plan is None and not self._branch_filtered and not self._ordered
 
     # ------------------------------------------------------------ internals
 
@@ -725,7 +737,18 @@ class QuerySet:
         """Reference get semantics (``query_set.py:308-366``): int id;
         str uid (exact, then prefix + is_latest, then latest-created
         fallback); or kwargs with an implicit is_latest=True for
-        versioned registries."""
+        versioned registries. Identity lookups see every branch.
+
+        ``get(idlike)`` on a bare ``QuerySet(lh, registry)`` runs no
+        Spark job: one driver read of the live registry files
+        (``Lakehouse._registry_rows``) and the same choice in Python.
+        Chained sets and ``get(**kwargs)`` run as Spark plans."""
+        names = REGISTRY_SCHEMAS[self.registry].names
+        if self._fresh and (
+            (isinstance(idlike, int) and "id" in names)
+            or (isinstance(idlike, str) and "uid" in names)
+        ):
+            return self._get_on_driver(idlike)
         if idlike is not None:
             # filter SELF, not a fresh QuerySet: get() on a filtered
             # chain must respect the chain (qs.filter(kind=...).get(uid)
@@ -755,6 +778,26 @@ class QuerySet:
                 raise DoesNotExist(f"no {self.registry} matches {kwargs}")
             return out
         return qs.one()
+
+    def _get_on_driver(self, idlike: int | str):
+        from .lakehouse import _newest
+
+        if isinstance(idlike, int):
+            rows = self.lh._registry_rows(self.registry, id=idlike)
+            if not rows:
+                raise DoesNotExist(f"no {self.registry} matches")
+        else:
+            fam = self.lh._registry_rows(self.registry, uid__startswith=idlike)
+            rows = [r for r in fam if r["uid"] == idlike]
+            if not rows and "is_latest" in REGISTRY_SCHEMAS[self.registry].names:
+                rows = [r for r in fam if r["is_latest"]]
+            if not rows:
+                if not fam:
+                    raise DoesNotExist(f"no {self.registry} with uid like {idlike!r}")
+                return _newest(fam)
+        if len(rows) > 1:
+            raise MultipleResultsFound(f"multiple {self.registry} rows match")
+        return rows[0]
 
     def delete(self, permanent: bool = False) -> None:
         """Reference ``QuerySet.delete`` (``query_set.py:1312``): trash

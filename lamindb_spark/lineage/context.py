@@ -20,7 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..catalog.lakehouse import Lakehouse, _now
+from ..catalog.lakehouse import Lakehouse, _newest, _now
 from ..functions.ids import base62, generate_uid
 from ..operators.graph import closure
 from .redaction import redact_params as _redact_params
@@ -134,12 +134,8 @@ def _get_or_create_transform(
 
     source_code, _n = redact_source(source_code)
     src_hash = hashlib.md5(source_code.encode()).hexdigest()
-    existing = (
-        lh.read_raw("transform")
-        .filter((F.col("hash") == src_hash) & (F.col("key") == key))
-        .orderBy(F.desc("created_at"))
-        .first()
-    )
+    family_rows = lh._registry_rows("transform", key=key)
+    existing = _newest([r for r in family_rows if r["hash"] == src_hash])
     if existing is not None:
         row = existing.asDict()
         if git_ref is not None and row.get("reference") is None:
@@ -153,12 +149,7 @@ def _get_or_create_transform(
             )
             row["reference"], row["reference_type"] = git_ref
         return row
-    family = (
-        lh.read_raw("transform")
-        .filter(F.col("key") == key)
-        .orderBy(F.desc("created_at"))
-        .first()
-    )
+    family = _newest(family_rows)
     if family is not None:
         # 16-char transform uid = 12-char stem + 4-char version
         uid = lh.next_version_uid("transform", family["uid"][:12])
@@ -223,20 +214,10 @@ def transform_from_path(
 def latest_run(lh: Lakehouse, transform_key: str) -> dict[str, Any] | None:
     """Reference ``Transform.latest_run`` (``transform.py:926-930``):
     the newest run of the transform's latest version, or None."""
-    tf = (
-        lh.read_raw("transform")
-        .filter((F.col("key") == transform_key) & F.col("is_latest"))
-        .orderBy(F.desc("created_at"))
-        .first()
-    )
+    tf = _newest(lh._registry_rows("transform", key=transform_key, is_latest=True))
     if tf is None:
         return None
-    run = (
-        lh.read_raw("run")
-        .filter(F.col("transform_id") == tf["id"])
-        .orderBy(F.desc("started_at"), F.desc("id"))
-        .first()
-    )
+    run = _newest(lh._registry_rows("run", transform_id=tf["id"]), "started_at", "id")
     return run.asDict() if run is not None else None
 
 

@@ -64,13 +64,38 @@ def test_branch_default_injection(lake):
     lake.restore("artifact", [row["id"]])
 
 
-def test_get_semantics(lake):
+def test_get_semantics(lake, monkeypatch):
+    import os
+
+    from lamindb_spark.catalog import lakehouse as lakehouse_mod
+
     row = qs(lake, "artifact").filter(key__contains="region").one()
-    assert qs(lake, "artifact").get(row["uid"])["id"] == row["id"]
-    # uid prefix + is_latest fallback (W2)
-    assert qs(lake, "artifact").get(row["uid"][:8])["id"] == row["id"]
-    with pytest.raises(DoesNotExist):
-        qs(lake, "artifact").get("zzzzzzzz")
+    other = qs(lake, "artifact").filter(key__contains="nation").one()
+    shared = os.path.commonprefix([row["uid"], other["uid"]])
+    lake.delete("artifact", [other["id"]])
+    # bare get(idlike) reads on the driver; byte limit 0 forces the
+    # Spark scan of the same files — both must answer alike
+    for limit in (lakehouse_mod._DRIVER_READ_MAX_BYTES, 0):
+        monkeypatch.setattr(lakehouse_mod, "_DRIVER_READ_MAX_BYTES", limit)
+        assert qs(lake, "artifact").get(row["uid"])["id"] == row["id"]
+        assert qs(lake, "artifact").get(row["id"])["uid"] == row["uid"]
+        # uid prefix + is_latest fallback (W2)
+        assert qs(lake, "artifact").get(row["uid"][:8])["id"] == row["id"]
+        with pytest.raises(DoesNotExist):
+            qs(lake, "artifact").get("zzzzzzzz")
+        with pytest.raises(DoesNotExist):
+            qs(lake, "artifact").get(10**9)
+        # identity lookups see every branch: the trashed row by uid,
+        # and both family heads (main + trash) behind a shared prefix
+        trashed = qs(lake, "artifact").get(other["uid"])
+        assert trashed["id"] == other["id"] and trashed["branch_id"] == -1
+        with pytest.raises(MultipleResultsFound):
+            qs(lake, "artifact").get(shared)
+        # get on a chain honours the chain
+        chained = qs(lake, "artifact").filter(key__contains="region")
+        with pytest.raises(DoesNotExist):
+            chained.get(other["uid"])
+        assert chained.get(row["uid"])["id"] == row["id"]
 
 
 def test_one_first_cardinality(lake):

@@ -1,7 +1,8 @@
 """Scale-safety of the catalog write path (VERDICT r01 #1):
 
 - ``save()`` never collects the existing registry to the driver — the
-  uid classification is a semi-join bounded by the batch;
+  uid classification yields only the batch's rows (a driver read under
+  the byte limit, a bounded Spark collect above it);
 - inserts append a part file instead of rewriting the table;
 - id allocation uses the persisted counter, not a max(id) scan per save;
 - appended small files compact once past the threshold.
@@ -23,6 +24,8 @@ def _registry_files(lakehouse, name):
 
 
 def test_save_never_collects_registry(lakehouse, monkeypatch):
+    from lamindb_spark.catalog import lakehouse as lakehouse_mod
+
     seeded = lakehouse.save("ulabel", [{"name": f"seed{i}"} for i in range(300)])
     assert len(seeded) == 300
     # patch the CONCRETE class (pyspark 4: pyspark.sql.DataFrame is an
@@ -37,6 +40,9 @@ def test_save_never_collects_registry(lakehouse, monkeypatch):
         return out
 
     monkeypatch.setattr(cls, "collect", spy)
+    # a registry over the driver-read limit classifies uids with a
+    # Spark scan (forced here with a 0-byte limit)
+    monkeypatch.setattr(lakehouse_mod, "_DRIVER_READ_MAX_BYTES", 0)
     # mixed batch: 5 updates (uids of existing rows) + 5 inserts
     batch = [{"uid": seeded[i]["uid"], "name": f"upd{i}"} for i in range(5)]
     batch += [{"name": f"new{i}"} for i in range(5)]
@@ -46,10 +52,30 @@ def test_save_never_collects_registry(lakehouse, monkeypatch):
     assert max(sizes) <= len(batch), (
         f"save() collected {max(sizes)} rows — registry leaked to driver"
     )
-    monkeypatch.setattr(cls, "collect", orig)
+    # under the limit the classification reads on the driver: no Spark
+    # collect at all, and still only the batch's rows become Rows
+    monkeypatch.undo()
+    sizes.clear()
+    monkeypatch.setattr(cls, "collect", spy)
+    local = lakehouse_mod._read_rows_local
+    local_sizes: list[int] = []
+
+    def local_spy(*args):
+        out = local(*args)
+        local_sizes.append(len(out))
+        return out
+
+    monkeypatch.setattr(lakehouse_mod, "_read_rows_local", local_spy)
+    batch = [{"uid": seeded[i]["uid"], "name": f"upd{i}"} for i in range(5, 10)]
+    batch += [{"name": f"new{i}"} for i in range(5, 10)]
+    assert len(lakehouse.save("ulabel", batch)) == 10
+    assert local_sizes and max(local_sizes) <= len(batch)
+    assert not sizes, f"save() ran Spark collects of {sizes} rows"
+    monkeypatch.undo()
     df = lakehouse.read_raw("ulabel")
-    assert df.count() == 305
+    assert df.count() == 310
     assert df.filter(F.col("name") == "upd0").count() == 1
+    assert df.filter(F.col("name") == "upd5").count() == 1
     assert df.filter(F.col("name") == "seed0").count() == 0  # updated away
     # update reused the original id
     upd = df.filter(F.col("name") == "upd1").first()
