@@ -5,9 +5,11 @@ every registry is a Parquet table under ``{root}/registries/{name}``,
 read as a DataFrame. Inserts are O(batch) parquet appends (new part
 file, opportunistic compaction); updates/deletes rewrite via an
 anti-join MERGE shape (write to ``.tmp`` dir → rename swap); ids come
-from a persisted per-registry counter — the existing registry is never
-collected to the driver on the write path. Payload writes go under the
-storage root like the reference's artifact keys.
+from a persisted per-registry counter. On the write path the driver
+holds only the rows of the batch's uids: a driver read streams the
+files and keeps the matches, a Spark scan collects just those rows.
+Payload writes go under the storage root like the reference's
+artifact keys.
 
 Write concurrency: plain Parquet has no transactions — single-writer
 discipline per registry with atomic directory swap (documented
@@ -148,6 +150,14 @@ def _group_feature_values(ann_rows) -> dict:
 #: A registry whose live files are all local and total at most this
 #: many bytes is read on the driver by ``Lakehouse._registry_rows``
 #: (pyarrow, no Spark job); a larger or remote one is scanned by Spark.
+#: ``scripts/driver_read_limit.py`` measured it on a 4-core host, two
+#: runs, with a synthetic 16-file artifact registry: at 63 MiB a
+#: driver ``get`` / dedup / 100-uid batch took 104-131 / 146-156 /
+#: 172-188 ms against Spark's 512-534 / 462-514 / 502-536 ms, and
+#: raised ``memory_mb`` by 26-27 MB against Spark's 44-45 MB. The
+#: driver read still won at 114 MiB (``get`` 181-287 vs 590-681 ms),
+#: so the limit caps the single-threaded driver scan near 0.2 s per
+#: lookup rather than marking where Spark starts to win.
 _DRIVER_READ_MAX_BYTES = 64 << 20
 
 
@@ -197,40 +207,53 @@ def _read_rows_local(schema, files: list[str], conds) -> list[Row]:
     """Rows of ``files`` matching every condition, read with pyarrow —
     the same rows, Row type and values a Spark ``collect()`` returns.
     Each file's key columns are read and masked first; only files with
-    a match pay the full-row read. A column missing from a file reads
-    as null, as under ``spark.read.schema(...)``. ``pq.read_table``
-    and ``pyarrow.dataset`` stay unused: importing the latter costs
-    tens of MB of driver memory."""
+    a match pay the full-row read. Both passes stream 8192-row batches
+    through a 64 KiB read buffer (no pre-buffered column chunks), so
+    the Arrow memory held at once is one batch, one page and one
+    dictionary per column, and the matched rows, whatever the file
+    size. A column missing from a file reads as
+    null, as under ``spark.read.schema(...)``. ``pq.read_table`` and
+    ``pyarrow.dataset`` stay unused: importing the latter costs tens
+    of MB of driver memory."""
     rows: list[Row] = []
     for path in files:
-        with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+        with pq.ParquetFile(
+            path, coerce_int96_timestamp_unit="us", buffer_size=1 << 16, pre_buffer=False
+        ) as pf:
             present = set(pf.schema_arrow.names)
-            n = pf.metadata.num_rows
 
-            def column(t, f):
+            def column(b, f):
                 if f.name in present:
-                    return t.column(f.name)
-                return pa.chunked_array([pa.nulls(n, to_arrow_type(f.dataType))])
+                    return b.column(f.name)
+                return pa.nulls(b.num_rows, to_arrow_type(f.dataType))
 
-            mask = None
+            def mask(b):
+                m = None
+                for col, op, value in conds:
+                    c = _arrow_mask(column(b, schema[col]), op, value)
+                    m = c if m is None else pc.and_(m, c)
+                return m
+
+            def batches(cols):
+                return pf.iter_batches(batch_size=8192, columns=cols)
+
             if conds:
                 keys = sorted({c for c, _op, _v in conds} & present)
-                kt = pf.read(columns=keys)
-                for col, op, value in conds:
-                    m = _arrow_mask(column(kt, schema[col]), op, value)
-                    mask = m if mask is None else pc.and_(mask, m)
-                if not pc.any(mask).as_py():
+                if not any(pc.any(mask(b)).as_py() for b in batches(keys)):
                     continue
-            t = pf.read(columns=[f.name for f in schema.fields if f.name in present])
-            cols = []
-            for f in schema.fields:
-                c = column(t, f)
-                if mask is not None:
-                    c = c.filter(mask)
-                if pa.types.is_timestamp(c.type):
-                    c = c.cast(pa.timestamp("us")).cast(pa.int64())
-                cols.append(c.to_pylist())
-            rows.extend(schema.fromInternal(v) for v in zip(*cols))
+            for b in batches([f.name for f in schema.fields if f.name in present]):
+                m = mask(b) if conds else None
+                if m is not None:
+                    b = b.filter(m)
+                    if not b.num_rows:
+                        continue
+                cols = []
+                for f in schema.fields:
+                    c = column(b, f)
+                    if pa.types.is_timestamp(c.type):
+                        c = c.cast(pa.timestamp("us")).cast(pa.int64())
+                    cols.append(c.to_pylist())
+                rows.extend(schema.fromInternal(v) for v in zip(*cols))
     return rows
 
 
@@ -333,9 +356,11 @@ class Lakehouse:
     # probes, describe, open) run no Spark job: they take the live
     # file list (a hidden-path-aware walk here, the commit-log
     # snapshot on that tier) and read it on the driver with pyarrow,
-    # key columns first. Nothing is cached, so a read always sees the
-    # latest commit. Only a registry over ``_DRIVER_READ_MAX_BYTES`` or
-    # with remote files goes back to a Spark scan of the same list.
+    # key columns first, in streamed batches that keep only matching
+    # rows. Nothing is cached, so a read always sees the latest
+    # commit. Only a registry over ``_DRIVER_READ_MAX_BYTES`` (where
+    # that limit comes from is noted at the constant) or with remote
+    # files goes back to a Spark scan of the same list.
 
     #: id-hash fan-out per registry. 16 keeps small lakes readable;
     #: the layout supports any value — changing it only requires one
@@ -842,11 +867,12 @@ class Lakehouse:
         with a uid matching an existing row update it; others insert
         with fresh id/uid. Returns the saved rows (with ids).
 
-        Scale shape (anti-join MERGE): the existing registry is NEVER
-        collected to the driver — uid classification (``_rows_by_uid``)
-        returns only the stored rows of the batch's uids; inserts are
-        an O(batch) parquet append; only matched updates pay a
-        join-based rewrite."""
+        Scale shape (anti-join MERGE): the existing registry is never
+        held on the driver — uid classification (``_rows_by_uid``)
+        keeps only the stored rows of the batch's uids (a driver read
+        streams the files in 8192-row batches, so it holds one batch
+        plus the matches); inserts are an O(batch) parquet append;
+        only matched updates pay a join-based rewrite."""
         now = _now()
         # Django-style field validation (docs/faq/validate-fields.md):
         # caller-supplied values only — merged/stored values were

@@ -739,35 +739,25 @@ class QuerySet:
         fallback); or kwargs with an implicit is_latest=True for
         versioned registries. Identity lookups see every branch.
 
-        ``get(idlike)`` on a bare ``QuerySet(lh, registry)`` runs no
-        Spark job: one driver read of the live registry files
-        (``Lakehouse._registry_rows``) and the same choice in Python.
-        Chained sets and ``get(**kwargs)`` run as Spark plans."""
-        names = REGISTRY_SCHEMAS[self.registry].names
-        if self._fresh and (
-            (isinstance(idlike, int) and "id" in names)
-            or (isinstance(idlike, str) and "uid" in names)
-        ):
-            return self._get_on_driver(idlike)
+        ``get(idlike)`` collects the candidate rows (that id, or every
+        uid ``idlike`` prefixes) and makes the choice in Python
+        (``_pick``). On a bare ``QuerySet(lh, registry)`` the
+        candidates come from a driver read of the live registry files
+        (``Lakehouse._registry_rows``, no Spark job); on a chained set
+        from one collect of the chain. ``get(**kwargs)`` runs as Spark
+        plans."""
         if idlike is not None:
             # filter SELF, not a fresh QuerySet: get() on a filtered
             # chain must respect the chain (qs.filter(kind=...).get(uid)
             # previously matched outside the kind filter — review
             # finding; Django/reference get-on-queryset semantics)
-            if isinstance(idlike, int):
-                return self.filter(id=idlike).one()
-            exact = self.filter(uid=idlike).one_or_none()
-            if exact is not None:
-                return exact
-            fam = self.filter(uid__startswith=idlike)
-            if "is_latest" in self._df.columns:
-                head = fam.filter(is_latest=True).one_or_none()
-                if head is not None:
-                    return head
-            out = fam.order_by("-created_at").first()
-            if out is None:
-                raise DoesNotExist(f"no {self.registry} with uid like {idlike!r}")
-            return out
+            field = "id" if isinstance(idlike, int) else "uid"
+            lookup = {"id": idlike} if field == "id" else {"uid__startswith": idlike}
+            if self._fresh and field in REGISTRY_SCHEMAS[self.registry].names:
+                rows = self.lh._registry_rows(self.registry, **lookup)
+            else:
+                rows = self.filter(**lookup)._df.collect()
+            return self._pick(idlike, rows)
         qs = self.filter(**kwargs)
         if "is_latest" in self._df.columns and "uid" not in kwargs and "id" not in kwargs:
             with_latest = qs.filter(is_latest=True).one_or_none()
@@ -779,25 +769,26 @@ class QuerySet:
             return out
         return qs.one()
 
-    def _get_on_driver(self, idlike: int | str):
+    def _pick(self, idlike: int | str, rows: list):
+        """``get(idlike)``'s choice among ``rows`` — the rows with that
+        id, or the uid family ``idlike`` prefixes: the exact uid, else
+        the ``is_latest`` head, else the newest ``created_at``."""
         from .lakehouse import _newest
 
-        if isinstance(idlike, int):
-            rows = self.lh._registry_rows(self.registry, id=idlike)
-            if not rows:
-                raise DoesNotExist(f"no {self.registry} matches")
-        else:
-            fam = self.lh._registry_rows(self.registry, uid__startswith=idlike)
-            rows = [r for r in fam if r["uid"] == idlike]
-            if not rows and "is_latest" in REGISTRY_SCHEMAS[self.registry].names:
-                rows = [r for r in fam if r["is_latest"]]
-            if not rows:
-                if not fam:
+        hits = rows
+        if isinstance(idlike, str):
+            hits = [r for r in rows if r["uid"] == idlike]
+            if not hits and rows and "is_latest" in rows[0].__fields__:
+                hits = [r for r in rows if r["is_latest"]]
+            if not hits:
+                if not rows:
                     raise DoesNotExist(f"no {self.registry} with uid like {idlike!r}")
-                return _newest(fam)
-        if len(rows) > 1:
+                return _newest(rows)
+        if not hits:
+            raise DoesNotExist(f"no {self.registry} matches")
+        if len(hits) > 1:
             raise MultipleResultsFound(f"multiple {self.registry} rows match")
-        return rows[0]
+        return hits[0]
 
     def delete(self, permanent: bool = False) -> None:
         """Reference ``QuerySet.delete`` (``query_set.py:1312``): trash

@@ -71,16 +71,24 @@ def _in_group(spark, fn):
     return out, group
 
 
-def _job_count(spark, group, at_least=0):
-    """Job ids recorded for ``group``; waits briefly for the listener
-    bus when at least ``at_least`` are expected."""
-    tracker = spark.sparkContext.statusTracker()
-    deadline = time.time() + 5
-    while True:
-        n = len(tracker.getJobIdsForGroup(group))
-        if n >= at_least or time.time() > deadline:
-            return n
-        time.sleep(0.05)
+def _job_count(spark, group):
+    """Jobs recorded for ``group``. The status store fills from the
+    listener bus asynchronously, so a sentinel job runs in its own
+    group first and is waited for: the bus is FIFO, so by the time the
+    sentinel shows, every job ``group`` started before it shows too."""
+    sc = spark.sparkContext
+    sentinel = f"flush-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(sentinel, "listener bus flush")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(sentinel):
+        assert time.time() < deadline, "the sentinel job was never recorded"
+        time.sleep(0.02)
+    return len(tracker.getJobIdsForGroup(group))
 
 
 def _multiset(rows):
@@ -147,7 +155,7 @@ def test_point_lookups_run_no_spark_job(lake, spark, monkeypatch):
     for kind, op in ops.items():
         out, group = _in_group(spark, op)
         assert out == driver[kind], kind  # describe JSON byte-identical
-        assert _job_count(spark, group, at_least=1) >= 1, kind
+        assert _job_count(spark, group) >= 1, kind
 
 
 def test_missing_column_reads_as_null(lakehouse, spark, tmp_path, monkeypatch):

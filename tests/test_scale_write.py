@@ -2,7 +2,8 @@
 
 - ``save()`` never collects the existing registry to the driver — the
   uid classification yields only the batch's rows (a driver read under
-  the byte limit, a bounded Spark collect above it);
+  the byte limit that holds one streamed batch plus the matches, a
+  bounded Spark collect above it);
 - inserts append a part file instead of rewriting the table;
 - id allocation uses the persisted counter, not a max(id) scan per save;
 - appended small files compact once past the threshold.
@@ -80,6 +81,56 @@ def test_save_never_collects_registry(lakehouse, monkeypatch):
     # update reused the original id
     upd = df.filter(F.col("name") == "upd1").first()
     assert upd["id"] == seeded[1]["id"]
+
+
+def test_driver_read_holds_matches_not_files(tmp_path):
+    """A ``uid__in`` batch spread over a large single-row-group
+    registry file (the shape a compaction writes) holds one streamed
+    batch, a page and a dictionary per column, and the matched rows in
+    Arrow memory, not the file: the peak Arrow allocation of the read,
+    taken in a fresh process, stays under half the file's size."""
+    import subprocess
+    import sys
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from lamindb_spark.catalog.schemas import REGISTRY_SCHEMAS
+
+    n, width = 200_000, 200
+    schema = REGISTRY_SCHEMAS["ulabel"]
+    cols = {f.name: pa.nulls(n, to_arrow_type(f.dataType)) for f in schema.fields}
+    cols["id"] = pa.array(range(1, n + 1), pa.int64())
+    cols["uid"] = pa.array([f"u{i:013d}" for i in range(n)])
+    offsets = np.arange(0, (n + 1) * width, width, dtype=np.int32)
+    text = os.urandom(n * width // 2).hex().encode()
+    cols["description"] = pa.StringArray.from_buffers(
+        n, pa.py_buffer(offsets), pa.py_buffer(text)
+    )
+    path = str(tmp_path / "part-0.parquet")
+    pq.write_table(pa.table(cols), path, row_group_size=n)
+    del cols, text
+    size = os.path.getsize(path)
+    assert size > 32 << 20
+    script = (
+        "import pyarrow as pa\n"
+        "from lamindb_spark.catalog.lakehouse import _read_rows_local\n"
+        "from lamindb_spark.catalog.schemas import REGISTRY_SCHEMAS\n"
+        f"uids = [f'u{{i:013d}}' for i in range(0, {n}, {n // 50})]\n"
+        "rows = _read_rows_local(REGISTRY_SCHEMAS['ulabel'], "
+        f"[{path!r}], [('uid', 'in', uids)])\n"
+        "assert sorted(r['uid'] for r in rows) == uids, len(rows)\n"
+        "print(pa.default_memory_pool().max_memory())\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    peak = int(out.stdout.split()[-1])
+    assert peak < size // 2, f"read peaked at {peak} Arrow bytes for a {size}-byte file"
 
 
 def test_insert_appends_not_rewrites(lakehouse):
