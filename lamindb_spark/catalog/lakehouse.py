@@ -150,14 +150,16 @@ def _group_feature_values(ann_rows) -> dict:
 #: A registry whose live files are all local and total at most this
 #: many bytes is read on the driver by ``Lakehouse._registry_rows``
 #: (pyarrow, no Spark job); a larger or remote one is scanned by Spark.
-#: ``scripts/driver_read_limit.py`` measured it on a 4-core host, two
-#: runs, with a synthetic 16-file artifact registry: at 63 MiB a
-#: driver ``get`` / dedup / 100-uid batch took 104-131 / 146-156 /
-#: 172-188 ms against Spark's 512-534 / 462-514 / 502-536 ms, and
-#: raised ``memory_mb`` by 26-27 MB against Spark's 44-45 MB. The
-#: driver read still won at 114 MiB (``get`` 181-287 vs 590-681 ms),
-#: so the limit caps the single-threaded driver scan near 0.2 s per
-#: lookup rather than marking where Spark starts to win.
+#: ``scripts/driver_read_limit.py`` measured the two paths on a 4-core
+#: host with a synthetic 16-file artifact registry. At 63 MiB (two
+#: runs) a driver ``get`` / dedup / 100-uid batch took 104-131 /
+#: 146-156 / 172-188 ms against Spark's 512-534 / 462-514 / 502-536 ms
+#: and raised ``memory_mb`` by 26-27 MB against Spark's 44-45 MB. The
+#: margin narrows with size: at 449 MiB (one run) it was 884 / 996 /
+#: 1077 ms against 1480 / 1254 / 1239 ms, which puts the crossover
+#: near 0.55 GiB on four local cores (more executors would move it
+#: lower; not measured). The limit sits well below it, where a driver
+#: lookup stays under 0.2 s.
 _DRIVER_READ_MAX_BYTES = 64 << 20
 
 
