@@ -42,12 +42,14 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import _create_row
 
 import logging
 
 logger = logging.getLogger("lamindb_spark")
 
 from ..functions.ids import base62, generate_uid, increment_suffix
+from ..operators.filters import ARROW_LOOKUP_NAMES, arrow_lookup_ok, arrow_mask, compile_lookup
 from ..operators.windows import mark_latest
 from ..sources.readers import read_payload
 from .payloadstore import (
@@ -148,8 +150,9 @@ def _group_feature_values(ann_rows) -> dict:
 
 
 #: A registry whose live files are all local and total at most this
-#: many bytes is read on the driver by ``Lakehouse._registry_rows``
-#: (pyarrow, no Spark job); a larger or remote one is scanned by Spark.
+#: many bytes is read on the driver by ``Lakehouse._registry_table``
+#: (pyarrow, no Spark job) for point lookups and QuerySet terminals; a
+#: larger or remote one is scanned by Spark.
 #: ``scripts/driver_read_limit.py`` measured the two paths on a 4-core
 #: host with a synthetic 16-file artifact registry. At 63 MiB (two
 #: runs) a driver ``get`` / dedup / 100-uid batch took 104-131 /
@@ -159,7 +162,11 @@ def _group_feature_values(ann_rows) -> dict:
 #: 1077 ms against 1480 / 1254 / 1239 ms, which puts the crossover
 #: near 0.55 GiB on four local cores (more executors would move it
 #: lower; not measured). The limit sits well below it, where a driver
-#: lookup stays under 0.2 s.
+#: lookup stays under 0.2 s. Set evaluation was measured at the same
+#: 63 MiB (one run, a prefix plus an EAV lookup matching 90% of the
+#: rows): ``filter(...).to_list`` of 792k uids took 1.65 s against
+#: Spark's 5.95 s, the default 20-row ``to_dataframe`` with the pivot
+#: 1.40 s against 2.91 s, so 64 MiB is below that crossover too.
 _DRIVER_READ_MAX_BYTES = 64 << 20
 
 
@@ -184,12 +191,12 @@ def _visible_files(table_path: str) -> list[str]:
 
 
 def _parse_lookups(schema, lookups: dict[str, Any]) -> list[tuple[str, str, Any]]:
-    """``col=v`` / ``col__startswith=p`` / ``col__in=[...]`` →
-    (column, op, value) triples."""
+    """``col=v`` / ``col__<lookup>=v`` → (column, lookup, value)
+    triples, for the lookups ``operators.filters.arrow_mask`` covers."""
     out = []
     for k, v in lookups.items():
         col, sep, op = k.rpartition("__")
-        if not sep or op not in ("startswith", "in"):
+        if not sep or op not in ARROW_LOOKUP_NAMES:
             col, op = k, "exact"
         if col not in schema.names:
             raise KeyError(f"unknown registry field {col!r}; known: {schema.names}")
@@ -197,42 +204,41 @@ def _parse_lookups(schema, lookups: dict[str, Any]) -> list[tuple[str, str, Any]
     return out
 
 
-def _arrow_mask(column, op: str, value):
-    if op == "exact":
-        return pc.is_null(column) if value is None else pc.equal(column, value)
-    if op == "startswith":
-        return pc.starts_with(column, pattern=value)
-    return pc.is_in(column, value_set=pa.array(list(value), type=column.type))
+def _arrow_types(schema) -> dict[str, pa.DataType]:
+    return {f.name: to_arrow_type(f.dataType) for f in schema.fields}
 
 
-def _read_rows_local(schema, files: list[str], conds) -> list[Row]:
-    """Rows of ``files`` matching every condition, read with pyarrow —
-    the same rows, Row type and values a Spark ``collect()`` returns.
-    Each file's key columns are read and masked first; only files with
-    a match pay the full-row read. Both passes stream 8192-row batches
-    through a 64 KiB read buffer (no pre-buffered column chunks), so
-    the Arrow memory held at once is one batch, one page and one
-    dictionary per column, and the matched rows, whatever the file
-    size. A column missing from a file reads as
-    null, as under ``spark.read.schema(...)``. ``pq.read_table`` and
+def _read_table_local(schema, files: list[str], columns: list[str], conds) -> pa.Table:
+    """``columns`` of the rows of ``files`` matching every condition,
+    read with pyarrow and typed as ``to_arrow_type`` of the registry
+    schema (the types Spark's Arrow transfer uses). Each file's
+    condition columns are read and masked first; only files with a
+    match pay the read of ``columns``. Both passes stream 8192-row
+    batches through a 64 KiB read buffer (no pre-buffered column
+    chunks), so the Arrow memory held at once is one batch, one page
+    and one dictionary per column, and the matched rows, whatever the
+    file size. A column missing from a file reads as null, as under
+    ``spark.read.schema(...)``. ``pq.read_table`` and
     ``pyarrow.dataset`` stay unused: importing the latter costs tens
     of MB of driver memory."""
-    rows: list[Row] = []
+    types = _arrow_types(schema)
+    out = []
     for path in files:
         with pq.ParquetFile(
             path, coerce_int96_timestamp_unit="us", buffer_size=1 << 16, pre_buffer=False
         ) as pf:
             present = set(pf.schema_arrow.names)
 
-            def column(b, f):
-                if f.name in present:
-                    return b.column(f.name)
-                return pa.nulls(b.num_rows, to_arrow_type(f.dataType))
+            def column(b, name):
+                if name not in present:
+                    return pa.nulls(b.num_rows, types[name])
+                c = b.column(name)
+                return c if c.type == types[name] else c.cast(types[name])
 
             def mask(b):
                 m = None
                 for col, op, value in conds:
-                    c = _arrow_mask(column(b, schema[col]), op, value)
+                    c = arrow_mask(op, column(b, col), value)
                     m = c if m is None else pc.and_(m, c)
                 return m
 
@@ -243,20 +249,35 @@ def _read_rows_local(schema, files: list[str], conds) -> list[Row]:
                 keys = sorted({c for c, _op, _v in conds} & present)
                 if not any(pc.any(mask(b)).as_py() for b in batches(keys)):
                     continue
-            for b in batches([f.name for f in schema.fields if f.name in present]):
-                m = mask(b) if conds else None
-                if m is not None:
-                    b = b.filter(m)
+            need = dict.fromkeys([*columns, *(c for c, _op, _v in conds)])
+            for b in batches([c for c in need if c in present]):
+                if conds:
+                    b = b.filter(mask(b))
                     if not b.num_rows:
                         continue
-                cols = []
-                for f in schema.fields:
-                    c = column(b, f)
-                    if pa.types.is_timestamp(c.type):
-                        c = c.cast(pa.timestamp("us")).cast(pa.int64())
-                    cols.append(c.to_pylist())
-                rows.extend(schema.fromInternal(v) for v in zip(*cols))
-    return rows
+                out.append(pa.record_batch([column(b, c) for c in columns], names=columns))
+    return pa.Table.from_batches(out, pa.schema([(c, types[c]) for c in columns]))
+
+
+def _table_values(schema, table: pa.Table) -> list[list]:
+    """``table``'s columns as the Python values a Spark ``collect()``
+    of the same columns holds (``fromInternal``; timestamps as int64
+    µs)."""
+    out = []
+    for name, c in zip(table.column_names, table.columns):
+        dt = schema[name].dataType
+        if pa.types.is_timestamp(c.type):
+            c = c.cast(pa.int64())
+        values = c.to_pylist()
+        out.append([dt.fromInternal(v) for v in values] if dt.needConversion() else values)
+    return out
+
+
+def _table_rows(schema, table: pa.Table) -> list[Row]:
+    """``table``'s rows as the ``Row`` objects a Spark ``collect()`` of
+    the same columns returns."""
+    names = table.column_names
+    return [_create_row(names, v) for v in zip(*_table_values(schema, table))]
 
 
 def _newest(rows, *cols: str):
@@ -354,15 +375,18 @@ class Lakehouse:
     # table format's partition-scoped MERGE; on a cluster the bucket
     # column doubles as a co-location key.
     #
-    # Point lookups (``_registry_rows``: get, dedup/family/storage
-    # probes, describe, open) run no Spark job: they take the live
+    # Registry reads run no Spark job: point lookups
+    # (``_registry_rows``: get, dedup/family/storage probes, describe,
+    # open) and QuerySet terminals (``QuerySet._on_driver``: filter,
+    # count, first/one, get(**kwargs), to_dataframe) take the live
     # file list (a hidden-path-aware walk here, the commit-log
-    # snapshot on that tier) and read it on the driver with pyarrow,
-    # key columns first, in streamed batches that keep only matching
-    # rows. Nothing is cached, so a read always sees the latest
-    # commit. Only a registry over ``_DRIVER_READ_MAX_BYTES`` (where
-    # that limit comes from is noted at the constant) or with remote
-    # files goes back to a Spark scan of the same list.
+    # snapshot on that tier) and read it on the driver with pyarrow
+    # (``_registry_table``): only the columns asked for, condition
+    # columns first, in streamed batches that keep only matching rows.
+    # Nothing is cached, so a read always sees the latest commit. Only
+    # a registry over ``_DRIVER_READ_MAX_BYTES`` (where that limit
+    # comes from is noted at the constant) or with remote files goes
+    # back to a Spark scan of the same list.
 
     #: id-hash fan-out per registry. 16 keeps small lakes readable;
     #: the layout supports any value — changing it only requires one
@@ -560,32 +584,51 @@ class Lakehouse:
         df = self.spark.read.schema(REGISTRY_SCHEMAS[name]).parquet(self._table_path(name))
         return df.drop("__bucket")
 
-    def _registry_rows(self, registry: str, /, **lookups: Any) -> list[Row]:
-        """The rows ``read_raw(registry).filter(...).collect()`` returns,
-        for ``col=v`` / ``col__startswith=p`` / ``col__in=[...]``
-        lookups (ANDed; no branch filter). Reads the live files on the
-        driver when they are local and small (see the registry-io
-        notes above), else scans them with Spark. Unlike ``read_raw``
-        it never records a rewrite snapshot (``_cl_read_files``)."""
+    def _live_files(self, registry: str) -> list[str]:
+        """The files a Spark scan of ``registry`` reads now (never
+        recorded as a rewrite snapshot, unlike ``read_raw``)."""
+        if self._use_commitlog:
+            return self._cl_files(registry)
+        return _visible_files(self._table_path(registry))
+
+    def _registry_table(self, registry: str, columns: list[str], /, **lookups: Any):
+        """``columns`` of the rows ``read_raw(registry).filter(...)``
+        returns, as a pyarrow Table read on the driver (see the
+        registry-io notes above), for ``col=v`` / ``col__<lookup>=v``
+        lookups ANDed (no branch filter). None when the driver cannot
+        serve it: a remote file, the files over
+        ``_DRIVER_READ_MAX_BYTES``, or a lookup ``arrow_mask`` does
+        not cover for that column type."""
         schema = REGISTRY_SCHEMAS[registry]
         conds = _parse_lookups(schema, lookups)
-        files = self._cl_files(registry) if self._use_commitlog else _visible_files(
-            self._table_path(registry)
-        )
+        types = _arrow_types(schema)
+        if not all(arrow_lookup_ok(op, types[c], v) for c, op, v in conds):
+            return None
+        files = self._live_files(registry)
+        if any(is_remote_scheme(p) for p in files):
+            return None
+        files = [_local_path(p) for p in files]
+        if sum(os.path.getsize(p) for p in files) > _DRIVER_READ_MAX_BYTES:
+            return None
+        return _read_table_local(schema, files, columns, conds)
+
+    def _registry_rows(self, registry: str, /, **lookups: Any) -> list[Row]:
+        """The rows ``read_raw(registry).filter(...).collect()`` returns
+        for ``_registry_table``'s lookups: its table as Rows, or a Spark
+        scan of the same live files when the driver cannot serve it."""
+        schema = REGISTRY_SCHEMAS[registry]
+        table = self._registry_table(registry, schema.names, **lookups)
+        if table is not None:
+            return _table_rows(schema, table)
+        files = self._live_files(registry)
         if not files:
             return []
-        if not any(is_remote_scheme(p) for p in files):
-            files = [_local_path(p) for p in files]
-            if sum(os.path.getsize(p) for p in files) <= _DRIVER_READ_MAX_BYTES:
-                return _read_rows_local(schema, files, conds)
         df = self.spark.read.schema(schema).parquet(*files).select(*schema.names)
-        for col, op, value in conds:
+        for col, op, value in _parse_lookups(schema, lookups):
             if op == "in":
                 df = self._filter_in(df, F.col(col), value)
-            elif op == "startswith":
-                df = df.filter(F.col(col).startswith(value))
             else:
-                df = df.filter(F.col(col).isNull() if value is None else F.col(col) == value)
+                df = df.filter(compile_lookup(f"{col}__{op}", value))
         return df.collect()
 
     def read(self, name: str) -> DataFrame:
@@ -1632,35 +1675,22 @@ class Lakehouse:
         ``describe_run``, ``models/_describe.py:340``: uid, transform
         key/version, started/finished, environment/report links, plus
         the run's input and output artifact uids — the engine's
-        run-graph edges)."""
+        run-graph edges). Assembled from ``_registry_rows`` point
+        lookups (no Spark job on the driver path)."""
         import json as _json
 
-        run = self.read("run").filter(F.col("uid") == uid).first()
+        visible = {"branch_id__in": [self.current_branch_id, MAIN_BRANCH_ID]}
+        run = next(iter(self._registry_rows("run", uid=uid, **visible)), None)
         if run is None:
             raise KeyError(f"no run with uid {uid!r}")
-        tf = (
-            self.read_raw("transform")
-            .filter(F.col("id") == run["transform_id"])
-            .first()
-        )
+        tf = None
+        if run["transform_id"] is not None:
+            tf = next(iter(self._registry_rows("transform", id=run["transform_id"])), None)
         outputs = sorted(
-            r["uid"]
-            for r in self.read("artifact")
-            .filter(F.col("run_id") == run["id"])
-            .select("uid")
-            .collect()
+            r["uid"] for r in self._registry_rows("artifact", run_id=run["id"], **visible)
         )
-        inputs: list[str] = []
-        if self._exists("run_input_artifacts"):
-            edges = self.read_raw("run_input_artifacts").filter(
-                F.col("run_id") == run["id"]
-            )
-            arts = self.read_raw("artifact").select(
-                F.col("id").alias("artifact_id"), "uid"
-            )
-            inputs = sorted(
-                r["uid"] for r in edges.join(arts, "artifact_id").select("uid").collect()
-            )
+        edges = self._registry_rows("run_input_artifacts", run_id=run["id"])
+        inputs = sorted(m["uid"] for m in self._joined_artifacts(edges))
         doc = {
             "run": {k: str(v) for k, v in run.asDict().items() if v is not None},
             "transform": {"uid": tf["uid"], "key": tf["key"]} if tf else None,
@@ -1669,35 +1699,35 @@ class Lakehouse:
         }
         return _json.dumps(doc, sort_keys=True)
 
+    def _joined_artifacts(self, links) -> list[Row]:
+        """The artifact rows an inner join of ``links`` (rows with an
+        ``artifact_id``) to the artifact registry yields, one per
+        matching link."""
+        ids = sorted({r["artifact_id"] for r in links} - {None})
+        by_id: dict[int, list[Row]] = {}
+        for a in self._registry_rows("artifact", id__in=ids) if ids else []:
+            by_id.setdefault(a["id"], []).append(a)
+        return [a for r in links for a in by_id.get(r["artifact_id"], [])]
+
     def describe_collection(self, uid_or_key: str) -> str:
         """Collection describe as one JSON document (reference
         ``describe_collection``, ``models/_describe.py:306``: header +
-        member count + members' keys/uids)."""
+        member count + members' keys/uids), from ``_registry_rows``
+        point lookups."""
         import json as _json
 
-        coll = (
-            self.read("collection")
-            .filter((F.col("uid") == uid_or_key) | (F.col("key") == uid_or_key))
-            .orderBy(F.desc("created_at"))
-            .first()
+        visible = {"branch_id__in": [self.current_branch_id, MAIN_BRANCH_ID]}
+        coll = _newest(
+            self._registry_rows("collection", uid=uid_or_key, **visible)
+            + self._registry_rows("collection", key=uid_or_key, **visible)
         )
         if coll is None:
             raise KeyError(f"no collection with uid/key {uid_or_key!r}")
-        members = []
-        if self._exists("collection_artifacts"):
-            bridge = self.read_raw("collection_artifacts").filter(
-                F.col("collection_id") == coll["id"]
-            )
-            arts = self.read_raw("artifact").select(
-                F.col("id").alias("artifact_id"), "uid", "key"
-            )
-            members = sorted(
-                (
-                    {"uid": r["uid"], "key": r["key"]}
-                    for r in bridge.join(arts, "artifact_id").collect()
-                ),
-                key=lambda m: m["uid"],
-            )
+        bridge = self._registry_rows("collection_artifacts", collection_id=coll["id"])
+        members = sorted(
+            ({"uid": a["uid"], "key": a["key"]} for a in self._joined_artifacts(bridge)),
+            key=lambda m: m["uid"],
+        )
         doc = {
             "collection": {
                 k: str(v) for k, v in coll.asDict().items() if v is not None

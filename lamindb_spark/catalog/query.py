@@ -16,20 +16,36 @@ of Django lookups:
 - default branch injection unless id/uid/hash is queried (F3,
   ``query_set.py:273-293``).
 
-Everything stays a lazy DataFrame plan until a terminal op.
+A QuerySet records its steps and is evaluated when a terminal op runs
+(as in Django), against the registry files live at that moment. A set
+of positive keyword filters, ``order_by`` and ``limit`` over local
+registries within ``lakehouse._DRIVER_READ_MAX_BYTES`` is evaluated on
+the driver with pyarrow and runs no Spark job; any other set replays
+its steps into the DataFrame plan described above.
 """
 
 from __future__ import annotations
 
+import copy
 import json
 import logging
+import math
 from dataclasses import dataclass
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.filters import LOOKUP_NAMES, Q, compile_lookup, split_lookup
+from ..operators.filters import (
+    LOOKUP_NAMES,
+    Q,
+    arrow_lookup_ok,
+    arrow_mask,
+    compile_lookup,
+    split_lookup,
+)
 from ..operators.search import search as search_op
 from .schemas import MAIN_BRANCH_ID, REGISTRY_SCHEMAS
 
@@ -159,47 +175,194 @@ class MultipleResultsFound(LookupError):
     pass
 
 
+class _Fallback(Exception):
+    """The driver cannot reproduce Spark's answer for this set; its
+    Spark plan runs instead."""
+
+
+def _json_scalar(text: str, ctx: str):
+    """``get_json_object(text, '$')`` (``ctx='str'``), ``try_cast`` to
+    double (``'num'``) or boolean (``'bool'``), as Spark computes them;
+    raises ``_Fallback`` where Python's reading could differ from
+    Jackson's: unparseable text (Jackson may read a prefix), lists and
+    dicts (Jackson re-serializes them), non-finite numbers, floats as
+    text (JVM ``Double.toString`` is not Python's ``repr``) and
+    strings under a cast (Spark's cast trims and parses the text)."""
+    try:
+        v = json.loads(text)
+    except ValueError:
+        raise _Fallback from None
+    if isinstance(v, (list, dict)) or (isinstance(v, float) and not math.isfinite(v)):
+        raise _Fallback
+    if ctx == "str":
+        if isinstance(v, bool):
+            return "true" if v else "false"
+        if v is None:
+            return "null"  # a JSON null renders as the string 'null'
+        if isinstance(v, float):
+            raise _Fallback
+        v = str(v)
+        try:
+            v.encode("utf-8")
+        except UnicodeEncodeError:  # a lone surrogate escape
+            raise _Fallback from None
+        return v
+    if isinstance(v, str):
+        raise _Fallback
+    if v is None or isinstance(v, bool):
+        return v if ctx == "bool" else None
+    if ctx == "num":
+        try:
+            return float(v)
+        except OverflowError:
+            raise _Fallback from None
+    # 'true'/'false'/'1'/'0' cast to boolean; a float always renders
+    # with '.' or 'E', so never does
+    return {1: True, 0: False}.get(v) if isinstance(v, int) else None
+
+
+_JSON_TYPES = {"str": pa.string(), "num": pa.float64(), "bool": pa.bool_()}
+
+
+def _json_column(column, ctx: str):
+    """``_json_scalar`` over an Arrow ``value_json`` column, parsing
+    each distinct text once; null stays null (as under Spark)."""
+    enc = pc.dictionary_encode(column.combine_chunks())
+    values = [_json_scalar(t, ctx) for t in enc.dictionary.to_pylist()]
+    return pa.array(values, _JSON_TYPES[ctx]).take(enc.indices)
+
+
+def _is_in(column, ids):
+    """Semi-join mask: ``column`` values in the id set ``ids`` (a null
+    matches nothing, as in an equi-join)."""
+    if isinstance(ids, pa.ChunkedArray):
+        ids = ids.combine_chunks()
+    return pc.is_in(column, value_set=ids.cast(column.type), skip_nulls=True)
+
+
+def _sort_indices(table, keys: list[tuple[str, bool]]):
+    """Stable sort order of ``table`` by (column, descending) keys in
+    Spark's null order: nulls first ascending, last descending, i.e.
+    nulls sort as the smallest value either way."""
+    cols, sort_keys = {}, []
+    for i, (col, desc) in enumerate(keys):
+        order = "descending" if desc else "ascending"
+        cols[f"v{i}"] = pc.is_valid(table[col])
+        cols[f"k{i}"] = table[col]
+        sort_keys += [(f"v{i}", order), (f"k{i}", order)]
+    return pc.sort_indices(pa.table(cols), sort_keys=sort_keys)
+
+
+def _arrow_to_pandas(spark, table, fields):
+    """``table`` (typed as Spark's Arrow transfer types ``fields``) as
+    the pandas frame ``DataFrame.toPandas()`` builds from the same
+    batches: pyarrow's conversion, then pyspark's per-field converter
+    in the session time zone."""
+    import pandas as pd
+    from pyspark.sql.pandas.types import _create_converter_to_pandas
+
+    names = [f.name for f in fields]
+    if table.num_rows:
+        pdf = table.rename_columns([f"col_{i}" for i in range(len(names))]).to_pandas(
+            date_as_object=True, coerce_temporal_nanoseconds=True
+        )
+        pdf.columns = names
+    else:
+        pdf = pd.DataFrame(columns=names)
+    tz = spark._jconf.sessionLocalTimeZone()
+    return pd.concat(
+        [
+            _create_converter_to_pandas(
+                f.dataType, f.nullable, timezone=tz, error_on_duplicated_field_names=False
+            )(pser)
+            for (_, pser), f in zip(pdf.items(), fields)
+        ],
+        axis="columns",
+    )
+
+
 class QuerySet:
-    """Lazy, immutable query over one registry."""
+    """Lazy, immutable query over one registry: the ops applied to it
+    are recorded as steps and run when a terminal op (``to_list``,
+    ``count``, ``first``, ``get``, ``to_dataframe``, ...) evaluates
+    the set, as in Django. A set then reads the registry files live
+    at that moment, on the driver when it can (see ``_on_driver``),
+    else as the Spark plan ``_df`` replays from the steps."""
 
     def __init__(self, lakehouse, registry: str, df: DataFrame | None = None,
                  branch_filtered: bool = False, ordered: bool = False):
         self.lh = lakehouse
         self.registry = registry
-        self._plan = df  # None until a terminal op needs the scan
+        self._base = df  # a caller's plan to start from: Spark-only
         self._branch_filtered = branch_filtered
         self._ordered = ordered
+        self._steps: tuple = ()
+        # the set's columns, known without building a plan
+        self._columns = list(df.columns if df is not None else REGISTRY_SCHEMAS[registry].names)
 
     @property
     def _df(self) -> DataFrame:
-        if self._plan is None:
-            self._plan = self.lh.read_raw(self.registry)
-        return self._plan
-
-    @property
-    def _fresh(self) -> bool:
-        """A bare ``QuerySet(lh, registry)``: no filter, order or scan
-        built yet, so point lookups can skip Spark."""
-        return self._plan is None and not self._branch_filtered and not self._ordered
+        """The set's Spark plan, replayed from the steps over a fresh
+        registry scan each time it is read."""
+        df = self._base if self._base is not None else self.lh.read_raw(self.registry)
+        for step in self._steps:
+            df = self._replay(df, *step)
+        return df
 
     # ------------------------------------------------------------ internals
 
-    def _clone(self, df: DataFrame, branch_filtered: bool | None = None,
-               ordered: bool | None = None) -> "QuerySet":
-        qs = QuerySet(
-            self.lh,
-            self.registry,
-            df,
-            self._branch_filtered if branch_filtered is None else branch_filtered,
-            self._ordered if ordered is None else ordered,
-        )
+    def _with(self, step: tuple, branch_filtered: bool | None = None,
+              ordered: bool | None = None, columns: list[str] | None = None) -> "QuerySet":
+        qs = copy.copy(self)
+        qs._steps = self._steps + (step,)
+        if branch_filtered is not None:
+            qs._branch_filtered = branch_filtered
+        if ordered is not None:
+            qs._ordered = ordered
+        if columns is not None:
+            qs._columns = list(columns)
         return qs
+
+    def _replay(self, df: DataFrame, kind: str, *args) -> DataFrame:
+        if kind == "branch":
+            return df.filter(self._branch_predicate())
+        if kind == "filter":
+            return self._apply_positive(df, *args)
+        if kind == "exclude":
+            return self._apply_negative(df, *args)
+        if kind == "order_by":
+            return df.orderBy(*[
+                F.col(f[1:]).desc() if f.startswith("-") else F.col(f).asc() for f in args[0]
+            ])
+        if kind == "limit":
+            return df.limit(args[0])
+        if kind == "slice":
+            start, stop = args
+            df = df.offset(start) if start else df
+            return df if stop is None else df.limit(max(stop - start, 0))
+        if kind == "values":
+            return df.select(*args[0])
+        if kind == "distinct":
+            return df.distinct()
+        if kind == "where":
+            return df.filter(args[0])
+        query, fields, limit, truncate_string = args  # "search"
+        if fields is None:
+            preferred = [c for c in ("name", "key", "description") if c in df.columns]
+            fields = preferred or [
+                c for c, t in df.dtypes if t == "string" and c not in ("uid",)
+            ]
+        syn = "synonyms" if "synonyms" in df.columns else None
+        return search_op(
+            df, query, fields=fields, synonyms_field=syn, limit=limit,
+            truncate_string=truncate_string,
+        )
 
     def _branch_predicate(self) -> Column:
         return F.col("branch_id").isin([self.lh.current_branch_id, MAIN_BRANCH_ID])
 
     def _needs_branch_filter(self, keys: list[str]) -> bool:
-        if self._branch_filtered or "branch_id" not in self._df.columns:
+        if self._branch_filtered or "branch_id" not in self._columns:
             return False
         roots = {split_lookup(k)[0].split("__", 1)[0] for k in keys}
         return not (roots & _IDENTITY_FIELDS)
@@ -220,16 +383,24 @@ class QuerySet:
                 out.append(child[0])
         return out
 
-    def _q_resolver(self, path: str):
-        """Field resolver for Q-object compilation: applies the same
-        alias map as the kwargs path and fails FAST (with the F11
-        suggestion) on fields the bare-Column path cannot express —
-        without this, ``Q(version='1')`` compiled to the nonexistent
-        ``version`` column and relation/EAV paths died later with an
-        opaque UNRESOLVED_COLUMN (review finding)."""
+    @staticmethod
+    def _q_leaves(q) -> list[str]:
+        """Every lookup key in a Q tree, negated branches included."""
+        out: list[str] = []
+        for child in q.children:
+            out.extend(QuerySet._q_leaves(child) if isinstance(child, Q) else [child[0]])
+        return out
+
+    def _resolve_field(self, path: str, columns: list[str]) -> str:
+        """Column name for a Q-object field: applies the same alias map
+        as the kwargs path and fails FAST (with the F11 suggestion) on
+        fields the bare-Column path cannot express — without this,
+        ``Q(version='1')`` compiled to the nonexistent ``version``
+        column and relation/EAV paths died later with an opaque
+        UNRESOLVED_COLUMN."""
         path = _FIELD_ALIASES.get(path, path)
-        if path in self._df.columns:
-            return F.col(path)
+        if path in columns:
+            return path
         if path == "features" or path.startswith("features__"):
             raise ValueError(
                 f"EAV lookup {path!r} needs a join and cannot appear "
@@ -244,8 +415,31 @@ class QuerySet:
             )
         raise ValueError(
             f"unknown field {path!r} on {self.registry}; "
-            f"available: {sorted(self._df.columns)}"
+            f"available: {sorted(columns)}"
         )
+
+    def _check_lookups(self, qs_args: tuple, kwargs: dict) -> None:
+        """Raise at ``filter``/``exclude`` time for what the plan would
+        reject: unknown fields, a bare ``features`` lookup, and Q
+        objects over relation or EAV paths."""
+        for q in qs_args:
+            if isinstance(q, Q):
+                for k in self._q_leaves(q):
+                    self._resolve_field(split_lookup(k)[0], self._columns)
+        for key in kwargs:
+            path = split_lookup(key)[0]
+            path = _FIELD_ALIASES.get(path, path)
+            if path == "features":
+                raise ValueError("features filter requires a feature name")
+            if (
+                not path.startswith("features__")
+                and self._relation_path(path) is None
+                and path not in self._columns
+            ):
+                raise ValueError(
+                    f"unknown field {path!r} on {self.registry}; "
+                    f"available: {sorted(self._columns)}"
+                )
 
     def _relation_path(self, path: str) -> tuple[list[tuple[str, Rel]], str] | None:
         """Split ``a__b__field`` into relation hops + terminal field, or
@@ -266,7 +460,7 @@ class QuerySet:
         field = "__".join(parts[i:]) or "id"
         return rels, field
 
-    def _compile_predicate(self, key: str, value: Any) -> tuple[Column | None, DataFrame | None, str | None]:
+    def _compile_predicate(self, key: str, value: Any, columns: list[str]) -> tuple[Column | None, DataFrame | None, str | None]:
         """Returns (column_predicate, semi_join_df, join_key): plain
         fields compile to a Column; relation paths compile to an id-set
         DataFrame to semi-join on the FK column."""
@@ -276,10 +470,10 @@ class QuerySet:
             return self._feature_predicate(path, op, value)
         rp = self._relation_path(path)
         if rp is None:
-            if path not in self._df.columns:
+            if path not in columns:
                 raise ValueError(
                     f"unknown field {path!r} on {self.registry}; "
-                    f"available: {sorted(self._df.columns)}"
+                    f"available: {sorted(columns)}"
                 )
             return compile_lookup(f"{path}__{op}", value), None, None
         rels, field = rp
@@ -302,21 +496,20 @@ class QuerySet:
 
     def _back_through_bridge(self, rel: Rel, ids: DataFrame) -> DataFrame:
         """For an M2M edge, convert target-id set → source-side id set
-        via the bridge (distinct — the bridge may link one source to
-        many matching targets; the semi-join consumer must stay
-        fanout-free, reference J6)."""
+        via the bridge. No ``distinct``: the bridge may link one source
+        to many matching targets, but the set only feeds semi/anti
+        joins, which never fan out (reference J6)."""
         if rel.bridge is None:
             return ids
         br = self.lh.read_raw(rel.bridge)
-        return (
-            br.join(ids, br[rel.bridge_remote] == ids["__k"], "left_semi")
-            .select(F.col(rel.bridge_local).alias("__k"))
-            .distinct()
+        return br.join(ids, br[rel.bridge_remote] == ids["__k"], "left_semi").select(
+            F.col(rel.bridge_local).alias("__k")
         )
 
     def _feature_predicate(self, path: str, op: str, value: Any) -> tuple[None, DataFrame, str]:
         """EAV filter: ``features__<name>[__op]=value`` → entity-id set
-        from the annotation table (reference F5/F6/F7)."""
+        from the annotation table (reference F5/F6/F7), for semi/anti
+        joins only (so no ``distinct``)."""
         parts = path.split("__")
         fname = parts[1] if len(parts) > 1 else None
         if fname is None:
@@ -327,7 +520,7 @@ class QuerySet:
         val_str = F.get_json_object(F.col("value_json"), "$")
         if op == "isnull":
             # presence/absence (reference _feature_manager.py:855-877)
-            ids = ann.select(F.col("entity_id").alias("__k")).distinct()
+            ids = ann.select(F.col("entity_id").alias("__k"))
             if value:
                 return None, ids, "__ANTI__id"
             return None, ids, "id"
@@ -339,7 +532,7 @@ class QuerySet:
         else:
             col = val_str
         pred = compile_lookup(f"v__{op}", value, resolver=lambda _p: col)
-        ids = ann.filter(pred).select(F.col("entity_id").alias("__k")).distinct()
+        ids = ann.filter(pred).select(F.col("entity_id").alias("__k"))
         return None, ids, "id"
 
     def _is_join_lookup(self, key: str) -> bool:
@@ -351,9 +544,18 @@ class QuerySet:
             return True
         return self._relation_path(path) is not None
 
+    def _join_based(self, qs_args: tuple, kwargs: dict) -> bool:
+        keys = list(kwargs) + [
+            k for q in qs_args if isinstance(q, Q) for k in self._q_lookup_keys(q)
+        ]
+        return any(isinstance(q, FeaturePredicate) for q in qs_args) or any(
+            self._is_join_lookup(k) for k in keys
+        )
+
     def _apply_positive(self, df: DataFrame, qs_args: tuple, kwargs: dict) -> DataFrame:
         """Conjunction of all conditions: plain columns as one filter,
         relation/feature paths as semi-joins (never fanout joins)."""
+        columns = df.columns
         conds: list[Column] = []
         for q in qs_args:
             if isinstance(q, FeaturePredicate):
@@ -370,9 +572,9 @@ class QuerySet:
                     "left_anti" if anti else "left_semi",
                 )
             else:
-                conds.append(q.to_column(self._q_resolver))
+                conds.append(q.to_column(lambda p: F.col(self._resolve_field(p, columns))))
         for key, value in kwargs.items():
-            col_pred, semi_df, join_key = self._compile_predicate(key, value)
+            col_pred, semi_df, join_key = self._compile_predicate(key, value, columns)
             if col_pred is not None:
                 conds.append(col_pred)
             else:
@@ -389,8 +591,40 @@ class QuerySet:
             df = df.filter(combined)
         return df
 
+    def _apply_negative(self, df: DataFrame, qs_args: tuple, kwargs: dict) -> DataFrame:
+        """exclude(): Django semantics are NOT(A AND B AND ...) — one
+        negation of the whole conjunction, not a conjunction of
+        negations (reference Django QuerySet.exclude())."""
+        if self._join_based(qs_args, kwargs):
+            # materialize the id-set matching the conjunction once,
+            # then anti-join — flipping each join independently would
+            # compute NOT(A) AND NOT(B) instead.
+            matching = self._apply_positive(df, qs_args, kwargs)
+            ids = matching.select(F.col("id").alias("__k"))
+            return df.join(ids, df["id"] == ids["__k"], "left_anti")
+        conds: list[Column] = [q.to_column() for q in qs_args]
+        conds += [self._compile_predicate(k, v, df.columns)[0] for k, v in kwargs.items()]
+        if conds:
+            combined = conds[0]
+            for c in conds[1:]:
+                combined = combined & c
+            df = df.filter(~combined)
+        return df
+
     def _apply(self, qs_args: tuple, kwargs: dict, negate: bool = False) -> "QuerySet":
-        df = self._df
+        join_based = negate and self._join_based(qs_args, kwargs)
+        if join_based and "id" not in self._columns:
+            # a join-based lookup needs the entity id to anti-join
+            # the matching set back out; after values(...) dropped
+            # it there is no correct fallback (the column-predicate
+            # path would yield a None cond and silently drop rows).
+            raise ValueError(
+                "exclude() with a relation/feature lookup requires the 'id' "
+                "column; call exclude() before projecting it away with values()"
+            )
+        # Q objects are resolved where the plan compiles them with field
+        # checks: in filter() and in a join-based exclude()
+        self._check_lookups(qs_args if not negate or join_based else (), kwargs)
         keys = list(kwargs) + [
             k
             for q in qs_args
@@ -398,52 +632,185 @@ class QuerySet:
             for k in self._q_lookup_keys(q)
         ]
         need_branch = self._needs_branch_filter(keys)
-        if negate and not self._branch_filtered and "branch_id" in df.columns:
+        if negate and not self._branch_filtered and "branch_id" in self._columns:
             # exclude() NEVER gets the identity bypass: the bypass
             # exists so a positive identity lookup can find rows on any
             # branch, but inverting the matched set must not expose
             # trash/foreign-branch rows (review finding)
             need_branch = True
-        if need_branch:
-            df = df.filter(self._branch_predicate())
+        qs = self._with(("branch",)) if need_branch else self
         # branch handling is now resolved for this chain either way: an
         # identity lookup (id/uid/hash) intentionally sees ALL branches
         # (reference query_set.py:273-293) and later terminal ops must
         # not re-inject the default predicate.
-        branch_filtered = True
-        if not negate:
-            return self._clone(self._apply_positive(df, qs_args, kwargs), branch_filtered)
-        # exclude(): Django semantics are NOT(A AND B AND ...) — one
-        # negation of the whole conjunction, not a conjunction of
-        # negations (reference Django QuerySet.exclude()).
-        join_based = any(isinstance(q, FeaturePredicate) for q in qs_args) or any(
-            self._is_join_lookup(k) for k in keys
+        return qs._with(("exclude" if negate else "filter", qs_args, kwargs), branch_filtered=True)
+
+    # ----------------------------------------------- driver evaluation
+    #
+    # A set built from a bare QuerySet with positive keyword filters
+    # (plain columns, ``features__`` EAV lookups, relation paths),
+    # ``order_by`` and ``limit`` is evaluated on the driver: Arrow
+    # columns of the live registry files (``Lakehouse._registry_table``),
+    # ``operators.filters.arrow_mask`` masks, and semi-joins as
+    # ``is_in`` over id sets. Any other step, a lookup or value type
+    # ``arrow_lookup_ok`` rejects, a registry the driver does not read
+    # (remote, or over ``_DRIVER_READ_MAX_BYTES``) or a JSON value whose
+    # Spark rendering Python cannot reproduce sends the whole set to
+    # its Spark plan, unchanged.
+
+    def _driver_ops(self) -> list[tuple] | None:
+        """The steps as driver ops — ("mask", col, lookup, value),
+        ("semi", col, anti, id_fn), ("sort", keys), ("limit", n) — or
+        None when one of them needs Spark."""
+        from .lakehouse import _arrow_types
+
+        if self._base is not None:
+            return None
+        types = _arrow_types(REGISTRY_SCHEMAS[self.registry])
+        ops: list[tuple] = []
+        for kind, *args in self._steps:
+            if kind == "branch":
+                ops.append(("mask", "branch_id", "in", [self.lh.current_branch_id, MAIN_BRANCH_ID]))
+            elif kind == "filter" and not args[0]:
+                for key, value in args[1].items():
+                    op = self._driver_op(key, value, types)
+                    if op is None:
+                        return None
+                    ops.append(op)
+            elif kind == "order_by":
+                keys = [(f.removeprefix("-"), f.startswith("-")) for f in args[0]]
+                if not all(c in types for c, _desc in keys):
+                    return None
+                ops.append(("sort", keys))
+            elif kind == "limit":
+                ops.append(("limit", args[0]))
+            else:
+                return None
+        return ops
+
+    def _driver_op(self, key: str, value: Any, types: dict) -> tuple | None:
+        path, op = split_lookup(key)
+        path = _FIELD_ALIASES.get(path, path)
+        if path.startswith("features__"):
+            if "id" not in types:
+                return None
+            fname = path.split("__")[1]
+            if op == "isnull":
+                return ("semi", "id", bool(value), lambda: self._feature_ids(fname, op, value))
+            ctx = (
+                "bool" if isinstance(value, bool)
+                else "num" if isinstance(value, (int, float)) else "str"
+            )
+            if ctx != "str":
+                if op not in (("exact",) if ctx == "bool" else ("exact", "gt", "gte", "lt", "lte")):
+                    return None
+                try:
+                    value = value if ctx == "bool" else float(value)
+                except OverflowError:
+                    return None
+            if not arrow_lookup_ok(op, _JSON_TYPES[ctx], value):
+                return None
+            return ("semi", "id", False, lambda: self._feature_ids(fname, op, value, ctx))
+        rp = self._relation_path(path)
+        if rp is None:
+            if path not in types or not arrow_lookup_ok(op, types[path], value):
+                return None
+            return ("mask", path, op, value)
+        from .lakehouse import _arrow_types
+
+        rels, field = rp
+        target = _arrow_types(REGISTRY_SCHEMAS[rels[-1][1].target])
+        if field not in target or not arrow_lookup_ok(op, target[field], value):
+            return None
+        return ("semi", rels[0][1].local_key, False,
+                lambda: self._relation_ids(rels, field, op, value))
+
+    def _driver_table(self, registry: str, columns: list[str], **lookups: Any):
+        t = self.lh._registry_table(registry, columns, **lookups)
+        if t is None:
+            raise _Fallback
+        return t
+
+    def _feature_ids(self, fname: str, op: str, value: Any, ctx: str | None = None):
+        """``_feature_predicate``'s entity-id set, read on the driver."""
+        ann = self._driver_table(
+            "annotation", ["entity_id", "value_json"],
+            entity_kind=self.registry, feature_name=fname,
         )
-        if join_based:
-            if "id" not in df.columns:
-                # a join-based lookup needs the entity id to anti-join
-                # the matching set back out; after values(...) dropped
-                # it there is no correct fallback (the column-predicate
-                # path would yield a None cond and silently drop rows).
-                raise ValueError(
-                    "exclude() with a relation/feature lookup requires the 'id' "
-                    "column; call exclude() before projecting it away with values()"
-                )
-            # materialize the id-set matching the conjunction once,
-            # then anti-join — flipping each join independently would
-            # compute NOT(A) AND NOT(B) instead.
-            matching = self._apply_positive(df, qs_args, kwargs)
-            ids = matching.select(F.col("id").alias("__k"))
-            out = df.join(ids, df["id"] == ids["__k"], "left_anti")
-            return self._clone(out, branch_filtered)
-        conds: list[Column] = [q.to_column() for q in qs_args]
-        conds += [self._compile_predicate(k, v)[0] for k, v in kwargs.items()]
-        if conds:
-            combined = conds[0]
-            for c in conds[1:]:
-                combined = combined & c
-            df = df.filter(~combined)
-        return self._clone(df, branch_filtered)
+        if op == "isnull":
+            return ann["entity_id"]
+        return ann["entity_id"].filter(arrow_mask(op, _json_column(ann["value_json"], ctx), value))
+
+    def _relation_ids(self, rels: list[tuple[str, Rel]], field: str, op: str, value: Any):
+        """``_compile_predicate``'s backward semi-join chain, read on
+        the driver: the id set to match ``rels[0]``'s local key."""
+        last = rels[-1][1]
+        ids = self._driver_table(last.target, [last.remote_key], **{f"{field}__{op}": value})
+        ids = self._bridge_ids(last, ids[last.remote_key])
+        for i in range(len(rels) - 2, -1, -1):
+            rel, inner = rels[i][1], rels[i + 1][1]
+            t = self._driver_table(rel.target, [rel.remote_key, inner.local_key])
+            ids = self._bridge_ids(rel, t[rel.remote_key].filter(_is_in(t[inner.local_key], ids)))
+        return ids
+
+    def _bridge_ids(self, rel: Rel, ids):
+        if rel.bridge is None:
+            return ids
+        br = self._driver_table(rel.bridge, [rel.bridge_local, rel.bridge_remote])
+        return br[rel.bridge_local].filter(_is_in(br[rel.bridge_remote], ids))
+
+    def _on_driver(self, columns: list[str] | None = None):
+        """The choke point of the collecting terminals: the set's rows
+        (``columns``, default all) as a pyarrow Table evaluated on the
+        driver, or None when the set must run as its Spark plan."""
+        ops = self._driver_ops()
+        schema = REGISTRY_SCHEMAS[self.registry]
+        columns = list(schema.names) if columns is None else columns
+        if ops is None or not set(columns) <= set(schema.names):
+            return None
+        needed = dict.fromkeys(columns)
+        pushdown: dict[str, Any] = {}
+        head = True  # masks before the first limit commute with the read
+        for op in ops:
+            if op[0] == "mask":
+                needed[op[1]] = None
+                if head:
+                    pushdown.setdefault(f"{op[1]}__{op[2]}", op[3])
+            elif op[0] == "semi":
+                needed[op[1]] = None
+            elif op[0] == "sort":
+                needed.update(dict.fromkeys(c for c, _desc in op[1]))
+            else:
+                head = False
+        try:
+            table = self._driver_table(self.registry, list(needed), **pushdown)
+            for op in ops:
+                if op[0] == "mask":
+                    table = table.filter(arrow_mask(op[2], table[op[1]], op[3]))
+                elif op[0] == "semi" and table.num_rows:
+                    hit = _is_in(table[op[1]], op[3]())
+                    table = table.filter(pc.invert(hit) if op[2] else hit)
+                elif op[0] == "sort":
+                    table = table.take(_sort_indices(table, op[1]))
+                elif op[0] == "limit":
+                    table = table.slice(0, op[1])
+        except _Fallback:
+            return None
+        return table.select(columns)
+
+    def _rows(self, n: int | None = None) -> list:
+        """The set's (first ``n``) rows — ``collect()``/``take(n)`` of
+        its plan, or the same Rows from the driver evaluation."""
+        from .lakehouse import _table_rows
+
+        qs = self.all()
+        table = qs._on_driver()
+        if table is None:
+            df = qs._df
+            return df.collect() if n is None else df.take(n)
+        if n is not None:
+            table = table.slice(0, n)
+        return _table_rows(REGISTRY_SCHEMAS[self.registry], table)
 
     # ------------------------------------------------------------ public api
 
@@ -455,17 +822,14 @@ class QuerySet:
 
     def all(self) -> "QuerySet":
         if self._needs_branch_filter([]):
-            return self._clone(self._df.filter(self._branch_predicate()), True)
+            return self._with(("branch",), branch_filtered=True)
         return self
 
     def order_by(self, *fields: str) -> "QuerySet":
-        cols = [
-            F.col(f[1:]).desc() if f.startswith("-") else F.col(f).asc() for f in fields
-        ]
-        return self._clone(self._df.orderBy(*cols), ordered=True)
+        return self._with(("order_by", fields), ordered=True)
 
     def limit(self, n: int) -> "QuerySet":
-        return self._clone(self._df.limit(n))
+        return self._with(("limit", n))
 
     # -- iteration / paging (reference: Django QuerySet __iter__/
     # __getitem__/iterator, inherited by models/query_set.py QuerySet) --
@@ -514,12 +878,7 @@ class QuerySet:
             if k.step is not None:
                 # Django returns a list for stepped slices
                 return list(self[k.start : k.stop])[:: k.step]
-            start = k.start or 0
-            base = self.all()
-            df = base._df.offset(start) if start else base._df
-            if k.stop is not None:
-                df = df.limit(max(k.stop - start, 0))
-            return base._clone(df)
+            return self.all()._with(("slice", k.start or 0, k.stop))
         if not isinstance(k, int):
             raise TypeError(
                 f"QuerySet indices must be integers or slices, not {type(k).__name__}"
@@ -534,20 +893,26 @@ class QuerySet:
     def values(self, *fields: str) -> "QuerySet":
         # branch predicate must land BEFORE the projection: the select
         # may drop branch_id, after which it could never be applied.
-        base = self.all()
-        return base._clone(base._df.select(*fields))
+        return self.all()._with(("values", fields), columns=list(fields))
 
     def values_list(self, field: str, flat: bool = True) -> list:
         """Driver-side projection collect. Bounded by registry size
         (like the reference's ORM terminal) — not for payload tables."""
-        rows = self.all()._df.select(field).collect()
-        return [r[0] for r in rows] if flat else [tuple(r) for r in rows]
+        from .lakehouse import _table_values
+
+        qs = self.all()
+        table = qs._on_driver([field])
+        if table is None:
+            values = [r[0] for r in qs._df.select(field).collect()]
+        else:
+            (values,) = _table_values(REGISTRY_SCHEMAS[self.registry], table)
+        return values if flat else [(v,) for v in values]
 
     def to_list(self, field: str) -> list:
         return self.values_list(field, flat=True)
 
     def distinct(self) -> "QuerySet":
-        return self._clone(self._df.distinct())
+        return self._with(("distinct",))
 
     def df(self) -> DataFrame:
         return self.all()._df
@@ -613,11 +978,80 @@ class QuerySet:
         ordered, and a preserved-order id re-filter so the include/
         feature joins run over at most ``limit`` entities — on a large
         registry the pivot joins touch 20 rows, not the table. Pass
-        ``limit=None`` for a full export (the pre-r10 behavior)."""
+        ``limit=None`` for a full export (the pre-r10 behavior).
+
+        Without ``include`` a set the driver can evaluate (see
+        ``_on_driver``) is exported with no Spark job: its rows and
+        the feature pivot come from the live registry files, and the
+        frame is built from Arrow as ``toPandas`` builds it."""
         subset = self.all()
         if order_by is not None and not subset._ordered:
             subset = subset.order_by(order_by)
-        base = subset._df
+        out = None if include else subset._driver_dataframe(features or [], limit)
+        pdf, is_truncated = out or subset._spark_dataframe(features, include, limit)
+        if is_truncated and limit == SEARCH_QUERY_DEFAULT_LIMIT:
+            logger.warning(
+                f"truncated query result to limit={limit} "
+                f"{self.registry} objects"
+            )
+        return pdf
+
+    def _driver_dataframe(self, features: list[str], limit: int | None):
+        """``to_dataframe``'s (frame, truncated) from the driver
+        evaluation, or None when Spark must build it."""
+        from pyspark.sql.types import StringType, StructField
+
+        schema = REGISTRY_SCHEMAS[self.registry]
+        if (
+            "id" not in schema.names
+            or len(set(features)) < len(features)
+            or set(features) & set(schema.names)
+            or not self.lh.spark._jconf.arrowPySparkEnabled()
+        ):
+            return None
+        # like the Spark path, a limited export evaluates the set's ids
+        # and reads full rows only for the first ``limit`` of them
+        table = self._on_driver(None if limit is None else ["id"])
+        if table is None:
+            return None
+        is_truncated = limit is not None and table.num_rows > limit
+        try:
+            if limit is not None:
+                ids = table["id"].slice(0, limit).combine_chunks()
+                table = self._driver_table(self.registry, schema.names, id__in=ids.to_pylist())
+                table = table.take(pc.sort_indices(pc.index_in(table["id"], value_set=ids)))
+            wide = self._feature_pivot(table["id"], features) if features else []
+        except _Fallback:
+            return None
+        # a scan's fields are all nullable, and so are the pivot's
+        fields = [StructField(f.name, f.dataType) for f in schema.fields]
+        fields += [StructField(f, StringType()) for f in features]
+        table = pa.Table.from_arrays([*table.columns, *wide], names=[f.name for f in fields])
+        return _arrow_to_pandas(self.lh.spark, table, fields), is_truncated
+
+    def _feature_pivot(self, ids, features: list[str]) -> list:
+        """One string column per feature aligned with ``ids``: the
+        pivot's ``first(get_json_object(value_json, '$'),
+        ignorenulls=True)``. An entity with two different values for a
+        feature raises ``_Fallback``, since Spark's ``first`` picks
+        either."""
+        ann = self._driver_table(
+            "annotation", ["entity_id", "feature_name", "value_json"],
+            entity_kind=self.registry, feature_name__in=features,
+        )
+        ann = ann.filter(_is_in(ann["entity_id"], ids))
+        text = _json_column(ann["value_json"], "str").to_pylist()
+        firsts: dict = {}
+        keys = zip(ann["entity_id"].to_pylist(), ann["feature_name"].to_pylist())
+        for (eid, name), v in zip(keys, text):
+            if eid is not None and v is not None and firsts.setdefault((name, eid), v) != v:
+                raise _Fallback
+        ids = ids.to_pylist()
+        return [pa.array([firsts.get((name, i)) for i in ids], pa.string()) for name in features]
+
+    def _spark_dataframe(self, features, include, limit):
+        """``to_dataframe``'s (frame, truncated) as Spark plans."""
+        base = self._df
         is_truncated = False
         if limit is not None and "id" in base.columns:
             limited_ids = [
@@ -678,13 +1112,7 @@ class QuerySet:
             base = base.join(wide, base["id"] == wide["entity_id"], "left").drop("entity_id")
         if "__pos" in base.columns:
             base = base.orderBy("__pos").drop("__pos")
-        pdf = base.toPandas()
-        if is_truncated and limit == SEARCH_QUERY_DEFAULT_LIMIT:
-            logger.warning(
-                f"truncated query result to limit={limit} "
-                f"{self.registry} objects"
-            )
-        return pdf
+        return base.toPandas(), is_truncated
 
     def lookup(self, field: str = "name") -> "Lookup":
         """Auto-complete namespace of rows keyed by a field (reference
@@ -697,7 +1125,7 @@ class QuerySet:
         reference's ORM lookup); filter first on huge registries."""
         import re as _re
 
-        rows = self.all()._df.collect()
+        rows = self._rows()
         mapping = {}
         for r in rows:
             v = r[field]
@@ -710,17 +1138,21 @@ class QuerySet:
     # terminal cardinality ops (reference query_set.py:93-116)
 
     def count(self) -> int:
-        return self.all()._df.count()
+        qs = self.all()
+        table = qs._on_driver(REGISTRY_SCHEMAS[self.registry].names[:1])
+        return qs._df.count() if table is None else table.num_rows
 
     def exists(self) -> bool:
-        return self.all()._df.limit(1).count() > 0
+        qs = self.all()
+        table = qs._on_driver(REGISTRY_SCHEMAS[self.registry].names[:1])
+        return qs._df.limit(1).count() > 0 if table is None else table.num_rows > 0
 
     def first(self):
-        rows = self.all()._df.take(1)
+        rows = self._rows(1)
         return rows[0] if rows else None
 
     def one(self):
-        rows = self.all()._df.take(2)
+        rows = self._rows(2)
         if len(rows) == 0:
             raise DoesNotExist(f"no {self.registry} matches")
         if len(rows) > 1:
@@ -728,7 +1160,7 @@ class QuerySet:
         return rows[0]
 
     def one_or_none(self):
-        rows = self.all()._df.take(2)
+        rows = self._rows(2)
         if len(rows) > 1:
             raise MultipleResultsFound(f"multiple {self.registry} rows match")
         return rows[0] if rows else None
@@ -741,25 +1173,19 @@ class QuerySet:
 
         ``get(idlike)`` collects the candidate rows (that id, or every
         uid ``idlike`` prefixes) and makes the choice in Python
-        (``_pick``). On a bare ``QuerySet(lh, registry)`` the
-        candidates come from a driver read of the live registry files
-        (``Lakehouse._registry_rows``, no Spark job); on a chained set
-        from one collect of the chain. ``get(**kwargs)`` runs as Spark
-        plans."""
+        (``_pick``). Like every terminal op, the collects evaluate on
+        the driver when the set allows it (``_on_driver``: a read of
+        the live registry files, no Spark job), else as the set's Spark
+        plan."""
         if idlike is not None:
             # filter SELF, not a fresh QuerySet: get() on a filtered
             # chain must respect the chain (qs.filter(kind=...).get(uid)
             # previously matched outside the kind filter — review
             # finding; Django/reference get-on-queryset semantics)
-            field = "id" if isinstance(idlike, int) else "uid"
-            lookup = {"id": idlike} if field == "id" else {"uid__startswith": idlike}
-            if self._fresh and field in REGISTRY_SCHEMAS[self.registry].names:
-                rows = self.lh._registry_rows(self.registry, **lookup)
-            else:
-                rows = self.filter(**lookup)._df.collect()
-            return self._pick(idlike, rows)
+            lookup = {"id": idlike} if isinstance(idlike, int) else {"uid__startswith": idlike}
+            return self._pick(idlike, self.filter(**lookup)._rows())
         qs = self.filter(**kwargs)
-        if "is_latest" in self._df.columns and "uid" not in kwargs and "id" not in kwargs:
+        if "is_latest" in self._columns and "uid" not in kwargs and "id" not in kwargs:
             with_latest = qs.filter(is_latest=True).one_or_none()
             if with_latest is not None:
                 return with_latest
@@ -859,22 +1285,12 @@ class QuerySet:
         """§2.9 weighted-rank search over the registry's text fields
         (reference ``query_manager.py:36-172`` incl. the 80%-length
         query truncation behind ``truncate_string``)."""
-        base = self.all()._df
-        if fields is None:
-            preferred = [c for c in ("name", "key", "description") if c in base.columns]
-            fields = preferred or [
-                c for c, t in base.dtypes if t == "string" and c not in ("uid",)
-            ]
-        syn = "synonyms" if "synonyms" in base.columns else None
-        out = search_op(
-            base,
-            query,
-            fields=fields,
-            synonyms_field=syn,
-            limit=limit,
-            truncate_string=truncate_string,
+        base = self.all()
+        return base._with(
+            ("search", query, fields, limit, truncate_string),
+            ordered=True,
+            columns=[*base._columns, "rank"],
         )
-        return self._clone(out, ordered=True)
 
     # ------------------------------------------------ artifact-set surface
     # Reference ``ArtifactSet`` (artifact_set.py:34-133): every artifact
@@ -903,7 +1319,7 @@ class QuerySet:
                 "this query set is unordered, consider using `.order_by()` "
                 "first to avoid opening the artifacts in an arbitrary order"
             )
-        rows = self.all()._df.collect()  # bounded: registry metadata rows
+        rows = self._rows()  # bounded: registry metadata rows
         if not rows:
             raise ValueError(f"cannot {op}() an empty artifact set")
         for r in rows:
@@ -922,8 +1338,7 @@ class QuerySet:
         lookup (a per-row ``artifact_path`` call would issue one
         registry action per member — N+1)."""
         roots = {
-            r["id"]: r["root"]
-            for r in self.lh.read_raw("storage").select("id", "root").collect()
+            r["id"]: r["root"] for r in self.lh._registry_rows("storage")
         }  # storage registry: a handful of rows
         return [f"{roots[r['storage_id']]}/{r['key']}" for r in rows]
 
@@ -1054,7 +1469,7 @@ class QuerySet:
         p = _local_path(path).rstrip("/")
         roots = [
             (r["id"], _local_path(r["root"]).rstrip("/"))
-            for r in self.lh.read_raw("storage").select("id", "root").collect()
+            for r in self.lh._registry_rows("storage")
         ]
         preds = [
             (F.col("storage_id") == sid) & (F.col("key") == p[len(root) + 1 :])
@@ -1062,11 +1477,11 @@ class QuerySet:
             if p.startswith(root + "/")
         ]
         if not preds:
-            return self._clone(self.all()._df.filter(F.lit(False)))
+            return self.all()._with(("where", F.lit(False)))
         combined = preds[0]
         for q in preds[1:]:
             combined = combined | q
-        return self._clone(self.all()._df.filter(combined), branch_filtered=True)
+        return self.all()._with(("where", combined), branch_filtered=True)
 
     def to_artifact(
         self,

@@ -11,6 +11,10 @@ no Python in the hot path.
 Relation traversal (``run__transform__key="x"``) is handled one level
 up by the query layer (see ``operators.joins``): the compiler receives a
 ``resolver`` mapping a dotted field path to a Column.
+
+``arrow_mask`` evaluates the same lookups over pyarrow arrays for
+registry sets read on the driver (``catalog.query``); it covers only
+the lookups and value types whose answer equals the Column's.
 """
 
 from __future__ import annotations
@@ -20,6 +24,8 @@ from functools import reduce
 from operator import and_, or_
 from typing import Any, Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -59,6 +65,70 @@ _LOOKUPS: dict[str, Callable[[Column, Any], Column]] = {
 }
 
 LOOKUP_NAMES = frozenset(_LOOKUPS)
+
+# lookup name → (pyarrow array, value) → boolean mask, for lookups whose
+# filter result equals the Column above (nulls drop out of both). Left
+# out: ``regex``/``iregex`` (Java regex is not RE2) and the ``i*``
+# lookups (Java's and utf8proc's case folding differ beyond ASCII).
+_ARROW_LOOKUPS: dict[str, Callable[[Any, Any], Any]] = {
+    "exact": lambda c, v: pc.is_null(c) if v is None else pc.equal(c, v),
+    "contains": lambda c, v: pc.match_substring(c, str(v)),
+    "startswith": lambda c, v: pc.starts_with(c, str(v)),
+    "endswith": lambda c, v: pc.ends_with(c, str(v)),
+    "in": lambda c, v: pc.is_in(c, value_set=pa.array(list(v), c.type), skip_nulls=True),
+    "gt": pc.greater,
+    "gte": pc.greater_equal,
+    "lt": pc.less,
+    "lte": pc.less_equal,
+    "isnull": lambda c, v: pc.is_null(c) if v else pc.is_valid(c),
+    "range": lambda c, v: pc.and_(pc.greater_equal(c, v[0]), pc.less_equal(c, v[1])),
+}
+
+ARROW_LOOKUP_NAMES = frozenset(_ARROW_LOOKUPS)
+
+
+def _arrow_scalar_ok(t: pa.DataType, v: Any) -> bool:
+    """``v`` compares with a ``t`` array without a Spark implicit cast.
+    Timestamps never do: a naive ``datetime`` literal depends on the
+    session time zone."""
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return isinstance(v, str)
+    if pa.types.is_boolean(t):
+        return isinstance(v, bool)
+    if isinstance(v, bool) or not isinstance(v, (int, float)):
+        return False
+    if pa.types.is_integer(t):
+        return isinstance(v, int) and -(1 << 63) <= v < (1 << 63)
+    # Spark orders NaN above every double; Arrow compares it false
+    return pa.types.is_floating(t) and v == v
+
+
+def arrow_lookup_ok(op: str, t: pa.DataType, value: Any) -> bool:
+    """``arrow_mask(op, column, value)`` equals the Spark lookup for a
+    column of type ``t``."""
+    if op not in _ARROW_LOOKUPS:
+        return False
+    if op == "isnull" or (op == "exact" and value is None):
+        return True
+    if op in ("contains", "startswith", "endswith"):
+        return pa.types.is_string(t) or pa.types.is_large_string(t)
+    if op == "in":
+        return isinstance(value, (list, tuple, set)) and all(
+            v is None or _arrow_scalar_ok(t, v) for v in value
+        )
+    if op == "range":
+        return (
+            isinstance(value, (list, tuple))
+            and len(value) == 2
+            and all(_arrow_scalar_ok(t, v) for v in value)
+        )
+    return _arrow_scalar_ok(t, value)
+
+
+def arrow_mask(op: str, column, value):
+    """Boolean mask of ``column`` for lookup ``op`` (see
+    ``arrow_lookup_ok`` for when it equals the Spark lookup)."""
+    return _ARROW_LOOKUPS[op](column, value)
 
 
 def split_lookup(key: str) -> tuple[str, str]:

@@ -1,15 +1,20 @@
-"""Time registry point lookups on the driver read against the Spark
-scan, at a chosen registry size — the measurement behind
+"""Time registry reads on the driver against the Spark scan, at a
+chosen registry size — the measurement behind
 ``lakehouse._DRIVER_READ_MAX_BYTES``.
 
     python scripts/driver_read_limit.py WORK_DIR ROWS [ROWS ...]
 
 For each ROWS it builds (once) a bucketed lake under WORK_DIR whose
 artifact registry holds that many synthetic rows in 16 files (about
-77 bytes a row), then runs each path in a fresh process and prints one
-JSON line: registry bytes, the median of five ``get(uid)``, hash
-(dedup) and 100-uid ``uid__in`` lookups in ms, and ``memory_mb``
-(perfbench's Python peak RSS + JVM non-heap) before and after.
+77 bytes a row) and whose annotation registry gives each artifact a
+``tissue`` feature (90% ``"liver"``). It then runs each path in a
+fresh process and prints one JSON line: registry bytes, the median of
+five runs in ms of each read — ``get(uid)``, the hash (dedup) and
+100-uid ``uid__in`` point lookups, and two QuerySet evaluations whose
+prefix and EAV lookup match 90% of the rows: ``filter`` (``to_list``
+of their uids) and ``to_dataframe`` (the default 20-row export with
+the feature pivot) — and ``memory_mb`` (perfbench's Python peak RSS +
+JVM non-heap) before and after.
 """
 
 import json
@@ -56,13 +61,28 @@ def build(spark, root, n):
         null("long").alias("schema_id"),
         null("timestamp").alias("updated_at"),
     )
-    (
-        df.withColumn("__bucket", F.col("id") % 16)
-        .repartition(16, "__bucket")
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(path)
+    ann = spark.range(1, n + 1).select(
+        F.lit("artifact").alias("entity_kind"),
+        F.col("id").alias("entity_id"),
+        null("long").alias("feature_id"),
+        F.lit("tissue").alias("feature_name"),
+        F.when(F.col("id") % 10 == 0, F.lit('"brain"')).otherwise(F.lit('"liver"')).alias(
+            "value_json"
+        ),
+        null("string").alias("label_kind"),
+        null("long").alias("label_id"),
+        F.lit(1).cast("long").alias("branch_id"),
+        F.lit("2024-01-01").cast("timestamp").alias("created_at"),
     )
+    ann_path = path.replace("/artifact", "/annotation")
+    for frame, key, table in ((df, "id", path), (ann, "entity_id", ann_path)):
+        (
+            frame.withColumn("__bucket", F.col(key) % 16)
+            .repartition(16, "__bucket")
+            .write.mode("overwrite")
+            .partitionBy("__bucket")
+            .parquet(table)
+        )
 
 
 def measure(spark, root, mode):
@@ -79,12 +99,15 @@ def measure(spark, root, mode):
     probe = {r["id"]: r for r in lh.read_raw("artifact").filter(f"id % {step} = 0").collect()}
     ids = sorted(probe)[:100]
     one = probe[ids[len(ids) // 2]]
+    most = QuerySet(lh, "artifact").filter(key__startswith="data/", features__tissue="liver")
     ops = {
         "get": lambda: QuerySet(lh, "artifact").get(one["uid"]),
         "dedup": lambda: lh._registry_rows("artifact", hash=one["hash"]),
         "uid_in100": lambda: lh._registry_rows(
             "artifact", uid__in=[probe[i]["uid"] for i in ids]
         ),
+        "filter": lambda: most.to_list("uid"),
+        "to_dataframe": lambda: most.to_dataframe(features=["tissue"]),
     }
     before = memory_mb(memory(spark))
     out = {"rows": n, "mode": mode, "bytes": sum(os.path.getsize(p) for p in files)}

@@ -221,12 +221,12 @@ def test_driver_reader_never_imports_pyarrow_dataset(lakehouse):
     lakehouse.save("ulabel", [{"name": "x"}, {"name": "y"}])
     script = (
         "import sys\n"
-        "from lamindb_spark.catalog.lakehouse import _read_rows_local, _visible_files\n"
+        "from lamindb_spark.catalog.lakehouse import _read_table_local, _visible_files\n"
         "from lamindb_spark.catalog.schemas import REGISTRY_SCHEMAS\n"
         f"files = _visible_files({lakehouse._table_path('ulabel')!r})\n"
-        "rows = _read_rows_local(REGISTRY_SCHEMAS['ulabel'], files, "
+        "table = _read_table_local(REGISTRY_SCHEMAS['ulabel'], files, ['name'], "
         "[('name', 'exact', 'x'), ('id', 'in', [1, 2, 3])])\n"
-        "assert [r['name'] for r in rows] == ['x'], rows\n"
+        "assert table['name'].to_pylist() == ['x'], table\n"
         "assert 'pyarrow.dataset' not in sys.modules\n"
         "print('ok')\n"
     )

@@ -58,15 +58,15 @@ def test_save_never_collects_registry(lakehouse, monkeypatch):
     monkeypatch.undo()
     sizes.clear()
     monkeypatch.setattr(cls, "collect", spy)
-    local = lakehouse_mod._read_rows_local
+    local = lakehouse_mod._read_table_local
     local_sizes: list[int] = []
 
     def local_spy(*args):
         out = local(*args)
-        local_sizes.append(len(out))
+        local_sizes.append(out.num_rows)
         return out
 
-    monkeypatch.setattr(lakehouse_mod, "_read_rows_local", local_spy)
+    monkeypatch.setattr(lakehouse_mod, "_read_table_local", local_spy)
     batch = [{"uid": seeded[i]["uid"], "name": f"upd{i}"} for i in range(5, 10)]
     batch += [{"name": f"new{i}"} for i in range(5, 10)]
     assert len(lakehouse.save("ulabel", batch)) == 10
@@ -116,12 +116,13 @@ def test_driver_read_holds_matches_not_files(tmp_path):
     assert size > 32 << 20
     script = (
         "import pyarrow as pa\n"
-        "from lamindb_spark.catalog.lakehouse import _read_rows_local\n"
+        "from lamindb_spark.catalog.lakehouse import _read_table_local\n"
         "from lamindb_spark.catalog.schemas import REGISTRY_SCHEMAS\n"
         f"uids = [f'u{{i:013d}}' for i in range(0, {n}, {n // 50})]\n"
-        "rows = _read_rows_local(REGISTRY_SCHEMAS['ulabel'], "
-        f"[{path!r}], [('uid', 'in', uids)])\n"
-        "assert sorted(r['uid'] for r in rows) == uids, len(rows)\n"
+        "schema = REGISTRY_SCHEMAS['ulabel']\n"
+        "table = _read_table_local(schema, "
+        f"[{path!r}], schema.names, [('uid', 'in', uids)])\n"
+        "assert sorted(table['uid'].to_pylist()) == uids, table.num_rows\n"
         "print(pa.default_memory_pool().max_memory())\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
