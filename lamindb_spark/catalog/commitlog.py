@@ -32,16 +32,29 @@ At 100 TB this is the shape that matters: appends from any number of
 ingest executors/jobs coordinate only on one tiny atomic commit-object
 create, never on data bytes; time travel falls out of the log for
 free (``snapshot(version=...)``).
+
+Metadata-sized writes skip Spark: when the rows are already a Python
+list on the driver, :func:`merge_rows` is :func:`merge_into` with the
+same file pruning, survivor/upsert file split and commit metadata,
+but it prunes against the exact key set in Python and streams the
+touched files through pyarrow (:func:`file_batches`), writing each
+staged file with :func:`write_parquet` (a hidden temp name renamed
+into place, so no reader ever sees a half-written file).
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import shutil
 import time
 import uuid
+from typing import Iterable
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from .logstore import DEFAULT_STORE, LogStore
@@ -766,8 +779,6 @@ def _file_column_spans(
     metadata reads, never data bytes. Returns (spans as (index, lo, hi),
     files with no usable stats). Shared by MERGE's rewrite pruning and
     the stats-pruned reader."""
-    import pyarrow.parquet as pq
-
     spans, no_stats = [], []
     for i, f in enumerate(files):
         md = pq.ParquetFile(f).metadata
@@ -920,6 +931,114 @@ def merge_into(
     }
     meta.update(extra_metadata or {})
     return log.commit(add=surv_rel + ups_rel, remove=old, metadata=meta)
+
+
+def write_parquet(path: str, batches: Iterable, schema: pa.Schema) -> int:
+    """Write ``batches`` (record batches or tables of ``schema``) as one
+    parquet file at ``path``, through a hidden temp name in the same
+    directory that ``os.replace`` puts in place once it is complete.
+    Returns the rows written; with none, no file is made."""
+    d, base = os.path.split(path)
+    tmp = os.path.join(d, f".{base}.{uuid.uuid4().hex[:8]}.tmp")
+    n = 0
+    writer = None
+    try:
+        for b in batches:
+            if not b.num_rows:
+                continue
+            if writer is None:
+                os.makedirs(d, exist_ok=True)
+                writer = pq.ParquetWriter(tmp, schema)
+            writer.write(b)
+            n += b.num_rows
+    except BaseException:
+        if writer is not None:
+            writer.close()
+            os.unlink(tmp)
+        raise
+    if writer is not None:
+        writer.close()
+        os.replace(tmp, path)
+    return n
+
+
+def file_batches(path: str, schema: pa.Schema):
+    """``path``'s rows as record batches of ``schema``, streamed 8192
+    rows at a time through a 64 KiB read buffer: a column missing from
+    the file reads as nulls (as under ``spark.read.schema(...)``), the
+    others are cast to the schema's types."""
+    with pq.ParquetFile(
+        path, coerce_int96_timestamp_unit="us", buffer_size=1 << 16, pre_buffer=False
+    ) as pf:
+        present = set(pf.schema_arrow.names)
+        cols = [n for n in schema.names if n in present]
+        for b in pf.iter_batches(batch_size=8192, columns=cols):
+            yield pa.record_batch(
+                [
+                    b.column(f.name).cast(f.type)
+                    if f.name in present
+                    else pa.nulls(b.num_rows, f.type)
+                    for f in schema
+                ],
+                schema=schema,
+            )
+
+
+def merge_rows(
+    table_path: str,
+    rows: pa.Table,
+    key: str,
+    store: LogStore | None = None,
+    max_bytes: int | None = None,
+) -> int | None:
+    """:func:`merge_into` for ``rows`` already on the driver, with no
+    Spark job: each live file's footer span of ``key`` is tested
+    against the exact key set of ``rows`` in Python; the touched files
+    are streamed through pyarrow, their rows of those keys dropped and
+    the rest written as the survivor file, ``rows`` as the upsert file;
+    one optimistic commit with :func:`merge_into`'s metadata publishes
+    add+remove. Every file is typed as ``rows``. Returns the committed
+    version (-1 for no rows), or None without writing anything when
+    the touched files total more than ``max_bytes``."""
+    log = CommitLog(table_path, store)
+    _, files = log.snapshot()
+    if not rows.num_rows:
+        return -1
+    keys = sorted({k for k in rows.column(key).to_pylist() if k is not None})
+    spans, no_stats = _file_column_spans(files, key)
+
+    def hit(lo, hi) -> bool:
+        j = bisect.bisect_left(keys, lo)
+        return j < len(keys) and keys[j] <= hi
+
+    hit_idx = {i for i, lo, hi in spans if hit(lo, hi)}
+    touched = no_stats + [files[i] for i, _lo, _hi in spans if i in hit_idx]
+    if max_bytes is not None and sum(os.path.getsize(f) for f in touched) > max_bytes:
+        return None
+    stage = f"merge-{uuid.uuid4().hex[:12]}"
+    stage_path = os.path.join(table_path, stage)
+    gone = pa.array(keys, rows.schema.field(key).type)
+    survivors = (
+        b.filter(pc.invert(pc.is_in(b.column(key), value_set=gone)))
+        for f in touched
+        for b in file_batches(f, rows.schema)
+    )
+    surv_rel = []
+    if write_parquet(os.path.join(stage_path, "surv", "part-0.parquet"), survivors, rows.schema):
+        surv_rel = [os.path.join(stage, "surv", "part-0.parquet")]
+    ups_rel = os.path.join(stage, "upsert", "part-0.parquet")
+    write_parquet(os.path.join(table_path, ups_rel), [rows], rows.schema)
+    return log.commit(
+        add=surv_rel + [ups_rel],
+        remove=[os.path.relpath(p, table_path) for p in touched],
+        metadata={
+            "op": "merge",
+            "key": key,
+            "n_rewritten": len(touched),
+            "n_pruned": len(files) - len(touched),
+            "survivor_files": surv_rel,
+        },
+    )
 
 
 def delete_where(

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import datetime
 import hashlib
+import itertools
 import os
 import shutil
 import uuid
@@ -42,7 +43,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import _create_row
+from pyspark.sql.types import _create_row, _make_type_verifier
 
 import logging
 
@@ -52,6 +53,7 @@ from ..functions.ids import base62, generate_uid, increment_suffix
 from ..operators.filters import ARROW_LOOKUP_NAMES, arrow_lookup_ok, arrow_mask, compile_lookup
 from ..operators.windows import mark_latest
 from ..sources.readers import read_payload
+from .commitlog import file_batches, write_parquet
 from .payloadstore import (
     HadoopPayloadStore,
     PayloadStore,
@@ -273,6 +275,26 @@ def _table_values(schema, table: pa.Table) -> list[list]:
     return out
 
 
+def _rows_table(schema, rows: list[dict[str, Any]]) -> pa.Table:
+    """``rows`` (dicts; missing fields are null) as a pyarrow Table
+    typed as ``_arrow_types(schema)``, converted as ``createDataFrame``
+    converts them: each row first passes pyspark's type verifier (so a
+    bad row raises before anything is written), then ``toInternal``
+    (a naive datetime is local time, as in ``createDataFrame``)."""
+    verify = _make_type_verifier(schema)
+    values = []
+    for r in rows:
+        row = tuple(r.get(f.name) for f in schema.fields)
+        verify(row)
+        values.append(schema.toInternal(row))
+    types = _arrow_types(schema)
+    cols = list(zip(*values)) or [()] * len(schema.fields)
+    return pa.table(
+        [pa.array(c, types[f.name]) for f, c in zip(schema.fields, cols)],
+        names=schema.names,
+    )
+
+
 def _table_rows(schema, table: pa.Table) -> list[Row]:
     """``table``'s rows as the ``Row`` objects a Spark ``collect()`` of
     the same columns returns."""
@@ -387,6 +409,18 @@ class Lakehouse:
     # a registry over ``_DRIVER_READ_MAX_BYTES`` (where that limit
     # comes from is noted at the constant) or with remote files goes
     # back to a Spark scan of the same list.
+    #
+    # Registry writes run no Spark job either on a local root: the
+    # rows of an append or an update are already a Python list, so
+    # ``_rows_table`` converts them to Arrow as ``createDataFrame``
+    # would and ``commitlog.write_parquet`` writes each file under a
+    # hidden temp name renamed into place. Appends write one file per
+    # touched bucket (one staged file plus an append commit on the
+    # commit-log tier); updates stream the touched buckets (the
+    # touched files, ``commitlog.merge_rows``) when they fit under the
+    # same byte limit, and otherwise rewrite them with Spark. Only a
+    # remote table path stages appends with Spark. Full rewrites
+    # (``_overwrite``: delete/restore/compaction) stay Spark jobs.
 
     #: id-hash fan-out per registry. 16 keeps small lakes readable;
     #: the layout supports any value — changing it only requires one
@@ -481,15 +515,24 @@ class Lakehouse:
         return key, kind in ("long", "integer", "short", "byte")
 
     def _with_bucket(self, df: DataFrame, name: str) -> DataFrame:
+        """``df`` with the ``__bucket`` column ``_buckets`` computes on
+        the driver: ``pmod(coalesce(key, 0), n_buckets)`` for a numeric
+        key, 0 for a string key (``annotation`` and ``actions``: both
+        are appended to or rewritten whole, never pruned by bucket)."""
         key, numeric = self._bucket_key(name)
-        col = (
-            F.coalesce(F.col(key).cast("long"), F.lit(0))
-            if numeric
-            else F.xxhash64(F.col(key))
-        )
+        if not numeric:
+            return df.withColumn("__bucket", F.lit(0))
+        col = F.coalesce(F.col(key).cast("long"), F.lit(0))
         return df.withColumn(
             "__bucket", F.pmod(col, F.lit(self.n_buckets)).cast("int")
         )
+
+    def _buckets(self, name: str, rows: list[dict[str, Any]]) -> list[int]:
+        """The ``__bucket`` of each of ``rows`` (see ``_with_bucket``)."""
+        key, numeric = self._bucket_key(name)
+        if not numeric:
+            return [0] * len(rows)
+        return [(r.get(key) or 0) % self.n_buckets for r in rows]
 
     def _refresh(self, name: str) -> None:
         """Invalidate any cached/persisted plans over this registry's
@@ -716,23 +759,36 @@ class Lakehouse:
         self._refresh(name)
 
     def _append(self, name: str, rows: list[dict[str, Any]]) -> None:
-        """Insert-only write: a NEW parquet part-file appended to the
-        registry directory — O(batch), never a table rewrite (the
-        reference batches 10k-row DB inserts, ``save.py:129``; the
-        Spark-native equivalent is an append commit). The batch is
-        coalesced to one file; small files are compacted opportunistically."""
+        """Insert-only write: NEW parquet part-files appended to the
+        registry — O(batch), never a table rewrite (the reference
+        batches 10k-row DB inserts, ``save.py:129``; the table-format
+        equivalent is an append commit). The rows are already on the
+        driver, so a local registry writes them with pyarrow and runs
+        no Spark job: one file per touched ``__bucket=`` dir on the
+        bucketed tier, one staged file plus one append commit on the
+        commit-log tier. A remote table path (commit log on an object
+        store) stages the batch with a Spark write instead. Small files
+        are compacted opportunistically."""
         if not rows:
             return
         schema = REGISTRY_SCHEMAS[name]
         full = [{f.name: r.get(f.name) for f in schema.fields} for r in rows]
-        new = self.spark.createDataFrame([Row(**r) for r in full], schema)
-        if self._use_commitlog:
-            self._cl_append(name, new)
+        path = self._table_path(name)
+        if is_remote_scheme(path):
+            self._cl_append(name, self.spark.createDataFrame([Row(**r) for r in full], schema))
+        elif self._use_commitlog:
+            table = _rows_table(schema, full)
+            rel = f"stage-{uuid.uuid4().hex[:12]}/part-0.parquet"
+            write_parquet(f"{path}/{rel}", [table], table.schema)
+            self._cl_log(name).commit(add=[rel], metadata={"op": "append"})
         else:
+            table = _rows_table(schema, full)
             self._ensure_bucketed(name)
-            self._with_bucket(new.coalesce(1), name).write.mode("append").partitionBy(
-                "__bucket"
-            ).parquet(self._table_path(name))
+            buckets = self._buckets(name, full)
+            for k in sorted(set(buckets)):
+                part = table.take([i for i, b in enumerate(buckets) if b == k])
+                out = f"{path}/__bucket={k}/part-{uuid.uuid4().hex}.parquet"
+                write_parquet(out, [part], table.schema)
         self._refresh(name)
         self._note_ids(name, full)
         self._maybe_compact(name)
@@ -959,47 +1015,65 @@ class Lakehouse:
 
     def _update_buckets(self, name: str, updates: list[dict[str, Any]]) -> None:
         """Copy-on-write by id-bucket: only the buckets containing
-        updated ids are re-read (partition-pruned scan) and atomically
-        swapped; every other bucket's files are untouched (their mtimes
-        are pinned by ``test_scale_write``). One updated row costs one
-        bucket rewrite — 1/n_buckets of the table — not a full rewrite;
-        the cluster-scale analogue is a table format's partition-scoped
-        MERGE commit."""
+        updated ids are re-read and atomically swapped; every other
+        bucket's files are untouched (their mtimes are pinned by
+        ``test_scale_write``). One updated row costs one bucket rewrite
+        — 1/n_buckets of the table — not a full rewrite; the commit-log
+        tier's analogue is a file-pruned MERGE commit.
+
+        When the touched files are local and total at most
+        ``_DRIVER_READ_MAX_BYTES``, the rewrite runs on the driver with
+        no Spark job: each touched bucket's files are streamed in
+        8192-row batches, the updated ids dropped, the bucket's updates
+        added, and the result written as a new bucket dir
+        (``commitlog.merge_rows`` on the commit-log tier). Above the
+        limit, or with remote files, Spark rewrites them."""
         schema = REGISTRY_SCHEMAS[name]
-        upd_df = self.spark.createDataFrame(
-            [Row(**{f.name: r.get(f.name) for f in schema.fields}) for r in updates],
-            schema,
-        )
+        full = [{f.name: r.get(f.name) for f in schema.fields} for r in updates]
+        path = self._table_path(name)
         if self._use_commitlog:
             # the real table-format MERGE: footer-span file pruning +
-            # one optimistic add/remove commit (commitlog.merge_into)
-            from .commitlog import merge_into
+            # one optimistic add/remove commit
+            from .commitlog import merge_into, merge_rows
 
             key, _numeric = self._bucket_key(name)
-            merge_into(
-                self.spark,
-                self._table_path(name),
-                upd_df,
-                key=key,
-                store=self.registry_log_store,
-            )
+            store = self.registry_log_store
+            if is_remote_scheme(path) or merge_rows(
+                path, _rows_table(schema, full), key, store, _DRIVER_READ_MAX_BYTES
+            ) is None:
+                upd_df = self.spark.createDataFrame([Row(**r) for r in full], schema)
+                merge_into(self.spark, path, upd_df, key=key, store=store)
             self._refresh(name)
             return
-        upd_ids = [r["id"] for r in updates]
-        path = self._table_path(name)
         self._ensure_bucketed(name)
-        buckets = sorted({int(i) % self.n_buckets for i in upd_ids})
-        touched = (
-            self.spark.read.schema(schema)
-            .parquet(path)
-            .filter(F.col("__bucket").isin(buckets))  # PartitionFilters prune
-            .drop("__bucket")
-        )
-        kept = touched.filter(~F.col("id").isin(upd_ids))
+        upd_buckets = self._buckets(name, full)
+        buckets = sorted(set(upd_buckets))
+        files = {k: _visible_files(f"{path}/__bucket={k}") for k in buckets}
         tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        self._with_bucket(kept.unionByName(upd_df), name).write.mode(
-            "overwrite"
-        ).partitionBy("__bucket").parquet(tmp)
+        if sum(os.path.getsize(f) for k in buckets for f in files[k]) <= _DRIVER_READ_MAX_BYTES:
+            upd = _rows_table(schema, full)
+            gone = upd.column("id").combine_chunks()
+            for k in buckets:
+                kept = (
+                    b.filter(pc.invert(pc.is_in(b.column("id"), value_set=gone)))
+                    for f in files[k]
+                    for b in file_batches(f, upd.schema)
+                )
+                mine = upd.take([i for i, b in enumerate(upd_buckets) if b == k])
+                out = f"{tmp}/__bucket={k}/part-{uuid.uuid4().hex}.parquet"
+                write_parquet(out, itertools.chain(kept, [mine]), upd.schema)
+        else:
+            upd_df = self.spark.createDataFrame([Row(**r) for r in full], schema)
+            touched = (
+                self.spark.read.schema(schema)
+                .parquet(path)
+                .filter(F.col("__bucket").isin(buckets))  # PartitionFilters prune
+                .drop("__bucket")
+            )
+            kept = touched.filter(~F.col("id").isin([r["id"] for r in full]))
+            self._with_bucket(kept.unionByName(upd_df), name).write.mode(
+                "overwrite"
+            ).partitionBy("__bucket").parquet(tmp)
         for k in buckets:
             src = f"{tmp}/__bucket={k}"
             dst = f"{path}/__bucket={k}"
@@ -1244,16 +1318,18 @@ class Lakehouse:
         artifact PER FILE under ``path`` (recursive), each keyed
         ``{folder_key}/{relative_path}``, all sharing ``run_id``.
 
-        The whole directory pays a CONSTANT number of Spark jobs
-        (VERDICT r10 #3 — the old per-file ``register_artifact`` loop
-        launched ~4 jobs and one 1-row parquet write per file, ~300k
-        jobs for the reference's own several-100k-files case):
+        The whole directory pays a CONSTANT number of registry reads
+        and writes (VERDICT r10 #3 — the old per-file
+        ``register_artifact`` loop launched ~4 jobs and one 1-row
+        parquet write per file, ~300k jobs for the reference's own
+        several-100k-files case); on a local registry under
+        ``_DRIVER_READ_MAX_BYTES`` none of them is a Spark job:
 
         1. driver-side stat+hash walk (pure file I/O, zero jobs),
         2. ONE dedup lookup — all batch hashes against non-trash rows,
            visible branch preferred (same scope as
            :meth:`register_artifact`),
-        3. ONE key-family lookup (+ one suffix scan only when a key
+        3. ONE key-family lookup (+ one suffix read only when a key
            already has a version family) for version bumps,
         4. ONE bulk ``_append`` of every new row,
         5. ONE family-scoped ``_reconcile_is_latest`` (skipped when no
@@ -1312,19 +1388,18 @@ class Lakehouse:
             batch.append((fp, fkey, store.md5(fp), sz))
         if not batch:
             return []
-        arts = self.read_raw("artifact")
+
+        def newest_first(rows):
+            return sorted(rows, key=lambda r: r["created_at"], reverse=True)
 
         # 2. one dedup lookup for every non-empty hash in the batch
         hashes = sorted({h for _fp, _k, h, sz in batch if sz > 0})
         by_hash: dict[str, dict[str, Any]] = {}
         if hashes:
             visible = {self.current_branch_id, MAIN_BRANCH_ID}
-            for r in (
-                self._filter_in(arts, F.col("hash"), hashes)
-                .filter(F.col("branch_id") != TRASH_BRANCH_ID)
-                .orderBy(F.desc("created_at"))
-                .collect()
-            ):
+            for r in newest_first(self._registry_rows("artifact", hash__in=hashes)):
+                if r["branch_id"] == TRASH_BRANCH_ID:
+                    continue
                 d = r.asDict()
                 cur = by_hash.get(d["hash"])
                 # newest-first; a visible-scope row beats a sibling one
@@ -1342,11 +1417,10 @@ class Lakehouse:
         head_by_key: dict[str, dict[str, Any]] = {}
         next_suffix: dict[str, str] = {}
         if new_keys:
-            for r in (
-                self._filter_in(arts, F.col("key"), new_keys)
-                .filter(F.col("branch_id") == self.current_branch_id)
-                .orderBy(F.desc("created_at"))
-                .collect()
+            for r in newest_first(
+                self._registry_rows(
+                    "artifact", key__in=sorted(set(new_keys)), branch_id=self.current_branch_id
+                )
             ):
                 stem_by_key.setdefault(r["key"], r["uid"][:stem_len])
                 head_by_key.setdefault(r["key"], r.asDict())
@@ -1355,11 +1429,7 @@ class Lakehouse:
 
                 stems = sorted(set(stem_by_key.values()))
                 best: dict[str, str] = {}
-                for r in (
-                    self._filter_in(arts, F.substring("uid", 1, stem_len), stems)
-                    .select("uid")
-                    .collect()
-                ):
+                for r in self._family_rows("artifact", stems):
                     stem, suf = r["uid"][:stem_len], r["uid"][stem_len:]
                     if len(suf) == 4 and (
                         stem not in best
@@ -2385,30 +2455,55 @@ class Lakehouse:
             return stem + "0000"
         return stem + increment_suffix(max(suffixes, key=decode_base62))
 
+    def _family_rows(self, name: str, stems: list[str]) -> list[Row]:
+        """Every row of the version families ``stems`` (uid prefixes of
+        ``_stem_len(name)``). One stem is a ``uid__startswith`` point
+        lookup; several read the uid column once and then the matching
+        rows, on the driver, or scan the live files once with Spark
+        when the driver cannot serve them."""
+        if len(stems) == 1:
+            return self._registry_rows(name, uid__startswith=stems[0])
+        n = self._stem_len(name)
+        uids = self._registry_table(name, ["uid"])
+        if uids is not None:
+            mine = pc.is_in(pc.utf8_slice_codeunits(uids["uid"], 0, n), value_set=pa.array(stems))
+            return self._registry_rows(name, uid__in=uids["uid"].filter(mine).to_pylist())
+        files = self._live_files(name)
+        if not files:
+            return []
+        df = self.spark.read.schema(REGISTRY_SCHEMAS[name]).parquet(*files)
+        return self._filter_in(df, F.substring("uid", 1, n), stems).collect()
+
     def _reconcile_is_latest(self, name: str, stems: list[str] | None = None) -> None:
         """Exactly one head per (stem uid, branch) — reference
         ``reconcile_is_latest_within_branch`` (``_is_versioned.py:338-373``).
 
         With ``stems`` (the common case: one new version landed), only
-        those families are re-marked and written back through the
-        bucket-scoped update path — O(family), not an O(registry)
-        rewrite per versioned ingest (review finding). Without
-        ``stems`` (bulk delete/restore), the full one-window rewrite
-        runs as before."""
+        those families are read (``_family_rows``), the head of each
+        (stem, branch) picked in ``mark_latest``'s order (``created_at``
+        desc, nulls last, then ``id`` desc), and only the rows whose
+        flag changes written back through the bucket-scoped update
+        path — O(family), not an O(registry) rewrite per versioned
+        ingest (review finding). Without ``stems`` (bulk
+        delete/restore), the full one-window rewrite runs as before."""
+        if stems is not None:
+            n = self._stem_len(name)
+            fams: dict[tuple, list[Row]] = {}
+            for r in self._family_rows(name, sorted(set(stems))):
+                fams.setdefault((r["uid"][:n], r["branch_id"]), []).append(r)
+            changed = []
+            for rows in fams.values():
+                head = _newest(rows, "created_at", "id")
+                changed += [
+                    {**r.asDict(), "is_latest": r is head}
+                    for r in rows
+                    if r["is_latest"] != (r is head)
+                ]
+            if changed:
+                self._update_buckets(name, changed)
+            return
         df = self.read_raw(name)
         stem = F.substring(F.col("uid"), 1, self._stem_len(name))
-        if stems is not None:
-            fam = df.filter(stem.isin(stems)).withColumn("__stem", stem)
-            marked = mark_latest(
-                fam,
-                family_cols=["__stem", "branch_id"],
-                order_col="created_at",
-                tiebreak_col="id",
-            ).drop("__stem")
-            rows = [r.asDict() for r in marked.collect()]  # family-sized
-            if rows:
-                self._update_buckets(name, rows)
-            return
         marked = mark_latest(
             df.withColumn("__stem", stem),
             family_cols=["__stem", "branch_id"],
@@ -2437,6 +2532,12 @@ class Lakehouse:
         if name in VERSIONED_REGISTRIES:
             self._reconcile_is_latest(name)
 
+    def _artifact_by_id(self, artifact_id: int) -> Row:
+        rows = self._registry_rows("artifact", id=artifact_id)
+        if not rows:
+            raise KeyError(f"artifact id {artifact_id} not found")
+        return rows[0]
+
     def delete_artifact(
         self,
         artifact_id: int,
@@ -2454,30 +2555,17 @@ class Lakehouse:
         interactively before deleting keyed payloads; a library can't,
         so payload deletion stays an explicit opt-in (default False,
         the row-only behavior)."""
-        row = (
-            self.read_raw("artifact").filter(F.col("id") == artifact_id).first()
-        )
-        if row is None:
-            raise KeyError(f"artifact id {artifact_id} not found")
+        row = self._artifact_by_id(artifact_id)
         if not permanent:
             self.delete("artifact", [artifact_id])
             return
         self.delete("artifact", [artifact_id], permanent=True)
         if storage and row["key"] is not None:
-            survivors = (
-                self.read_raw("artifact")
-                .filter(
-                    (F.col("key") == row["key"])
-                    & (F.col("storage_id") == row["storage_id"])
-                )
-                .count()
+            survivors = self._registry_rows(
+                "artifact", key=row["key"], storage_id=row["storage_id"]
             )
-            if survivors == 0:
-                st = (
-                    self.read_raw("storage")
-                    .filter(F.col("id") == row["storage_id"])
-                    .first()
-                )
+            if not survivors:
+                (st,) = self._registry_rows("storage", id=row["storage_id"])
                 target = _local_path(st["root"]).rstrip("/") + "/" + row["key"]
                 self._store_for(target).remove(target)
 
@@ -2495,11 +2583,7 @@ class Lakehouse:
         and replacing with identical bytes is a no-op. File↔directory
         replacement is rejected (the reference's overwrite_versions
         shape check)."""
-        row = (
-            self.read_raw("artifact").filter(F.col("id") == artifact_id).first()
-        )
-        if row is None:
-            raise KeyError(f"artifact id {artifact_id} not found")
+        row = self._artifact_by_id(artifact_id)
         if not row["is_latest"]:
             # every version of a key shares ONE payload path (root/key
             # serves the newest bytes) — replacing a non-latest row
@@ -2531,9 +2615,7 @@ class Lakehouse:
             suffix = os.path.splitext(path)[1]
         if content_hash == row["hash"]:
             return row.asDict()  # identical bytes: no-op
-        st = (
-            self.read_raw("storage").filter(F.col("id") == row["storage_id"]).first()
-        )
+        (st,) = self._registry_rows("storage", id=row["storage_id"])
         target = _local_path(st["root"]).rstrip("/") + "/" + row["key"]
         tstore = self._store_for(path, target)
         # copy-then-swap (the _overwrite pattern): a failed copy must
@@ -2752,10 +2834,7 @@ class Lakehouse:
         constraint. Returns the number of new links."""
         existing = {
             (r["ulabel_id"], r["feature_id"])
-            for r in self.read_raw("artifact_ulabels")
-            .filter(F.col("artifact_id") == artifact_id)
-            .select("ulabel_id", "feature_id")
-            .collect()  # bounded: one artifact's links
+            for r in self._registry_rows("artifact_ulabels", artifact_id=artifact_id)
         }
         rows = [
             {

@@ -1085,6 +1085,11 @@ class QuerySet:
                 base = base.join(
                     F.broadcast(pos_df), base["id"] == F.col("__pid")
                 ).drop("__pid")
+        elif include or features:
+            # a full export: number the rows in the set's order before
+            # the left joins below reshuffle them (the id is nondeterministic,
+            # so Catalyst keeps it above the set's sort)
+            base = base.withColumn("__pos", F.monotonically_increasing_id())
         for path in include or []:
             col_df, name, to_many = self._include_column(base, path)
             col_df = col_df.withColumnRenamed("__eid", "__inc_id")

@@ -198,11 +198,9 @@ def test_to_dataframe_frames_equal(lake, spark, monkeypatch, caplog):
     ]
     with caplog.at_level(logging.WARNING, logger="lamindb_spark"):
         driver, forced = _both_paths(spark, monkeypatch, ops)
-    # Spark's limit=None export does not keep the set's order through
-    # the pivot join; the driver's does
+    # a limit=None export keeps the set's order through the pivot join
     described = driver[1]["description"].fillna("").tolist()
     assert described == sorted(described) and described[0] == ""
-    driver[1], forced[1] = (x.sort_values("id", ignore_index=True) for x in (driver[1], forced[1]))
     for d, f in zip(driver, forced):
         pd.testing.assert_frame_equal(d, f)
     first = driver[0]

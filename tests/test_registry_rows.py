@@ -14,6 +14,7 @@ import uuid
 from collections import Counter
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from lamindb_spark.catalog import lakehouse as lakehouse_mod
@@ -235,3 +236,183 @@ def test_driver_reader_never_imports_pyarrow_dataset(lakehouse):
         [sys.executable, "-c", script], cwd=repo, capture_output=True, text=True, timeout=120
     )
     assert out.returncode == 0 and out.stdout.strip() == "ok", out.stderr
+
+
+# ------------------------------------------------------------ the write path
+
+
+def _sample_rows(schema, base):
+    """Two rows of ``schema``: every field set (non-ASCII text, a naive
+    and a tz-aware datetime), then every nullable field null."""
+    naive = datetime.datetime(2024, 3, 31, 1, 30, 15, 250000)
+    aware = datetime.datetime(
+        2024, 7, 1, 23, 59, 59, 999999, tzinfo=datetime.timezone(datetime.timedelta(hours=-5))
+    )
+    rows = []
+    for i, ts in enumerate((naive, aware)):
+        values = {
+            "bigint": lambda j: base + 100 * i + j,
+            "string": lambda j: f"é漢字 ✓ {j}/{i}",
+            "timestamp": lambda j: ts,
+            "boolean": lambda j: bool((i + j) % 2),
+        }
+        rows.append(
+            {
+                f.name: None if i and f.nullable else values[f.dataType.simpleString()](j)
+                for j, f in enumerate(schema.fields)
+            }
+        )
+    return rows
+
+
+def test_driver_writer_matches_spark_per_registry(spark, tmp_path):
+    from pyspark.sql.types import StructField, StructType
+
+    samples = {
+        name: _sample_rows(schema, 1000 * (k + 1))
+        for k, (name, schema) in enumerate(REGISTRY_SCHEMAS.items())
+    }
+    # the rows the replaced Spark write stored: createDataFrame's
+    # conversion of the same dicts (one frame, a struct per registry)
+    nested = StructType([StructField(n, s) for n, s in REGISTRY_SCHEMAS.items()])
+    converted = spark.createDataFrame(
+        [Row(**{n: Row(**rows[i]) for n, rows in samples.items()}) for i in range(2)], nested
+    ).collect()
+    lakes = [_make(spark, str(tmp_path / tier), tier) for tier in TIERS]
+    for name, rows in samples.items():
+        want = _multiset(r[name] for r in converted)
+        assert len(want) == 2, name
+        for lh in lakes:
+            before = _multiset(lh._registry_rows(name))
+            lh._append(name, rows)
+            assert _multiset(lh.read_raw(name).collect()) == before + want, name
+            assert _multiset(lh._registry_rows(name)) == before + want, name
+
+
+def test_driver_writer_rejects_bad_rows_before_writing(lakehouse):
+    files = lakehouse_mod._visible_files(lakehouse._table_path("ulabel"))
+    for bad in ({"name": 5}, {"name": "x", "uid": None}, {"name": "x", "created_at": "now"}):
+        row = {"id": 7, "uid": "bad0000000000", "branch_id": 1,
+               "created_at": datetime.datetime(2024, 1, 1), **bad}
+        with pytest.raises((TypeError, ValueError)):
+            lakehouse._append("ulabel", [{**row, "name": "ok", "created_at": row["created_at"]}, row])
+    assert lakehouse_mod._visible_files(lakehouse._table_path("ulabel")) == files
+
+
+def _jobs(spark, fn):
+    out, group = _in_group(spark, fn)
+    return out, _job_count(spark, group)
+
+
+def _contents(lh, name):
+    return _multiset(lh.read_raw(name).collect())
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_write_flow_runs_no_spark_job(spark, tmp_path, tier, monkeypatch):
+    root = str(tmp_path / "lake")
+    lh, jobs = _jobs(spark, lambda: _make(spark, root, tier))
+    assert jobs == 0, "open an empty lake"
+    lh.settings.creation.artifact_silence_missing_run_warning = True
+    labels = lh.save("ulabel", [{"name": "a"}, {"name": "b"}])
+    src = tmp_path / "f.txt"
+    ctx = Context(lh)
+    steps = [
+        ("track", lambda: ctx.track("pipelines/flow.py", source_code="print('flow')")),
+        ("register", lambda: lh.register_artifact(_write(src, "one"), key="flow/f.txt")),
+        ("version", lambda: lh.register_artifact(_write(src, "two"), key="flow/f.txt")),
+        ("annotate", lambda: lh.annotate_many("artifact", [(1, {"tissue": "liver"})])),
+        ("link", lambda: lh.link_labels(1, [r["id"] for r in labels])),
+        ("finish", lambda: ctx.finish()),
+    ]
+    for kind, step in steps:
+        _out, jobs = _jobs(spark, step)
+        assert jobs == 0, kind
+    (head,) = lh._registry_rows("artifact", key="flow/f.txt", is_latest=True)
+    assert head["uid"].endswith("0001")
+    # the update and the reconcile leave the same contents on the
+    # driver and, forced, on Spark
+    for limit in (lakehouse_mod._DRIVER_READ_MAX_BYTES, 0):
+        monkeypatch.setattr(lakehouse_mod, "_DRIVER_READ_MAX_BYTES", limit)
+        before = _contents(lh, "ulabel")
+        (old,) = lh._registry_rows("ulabel", id=labels[0]["id"])
+        _out, jobs = _jobs(spark, lambda: lh.save("ulabel", [{"uid": old["uid"], "name": f"n{limit}"}]))
+        assert (jobs >= 1) == (limit == 0), limit
+        new = old.asDict() | {"name": f"n{limit}"}
+        want = before - Counter([(tuple(old.__fields__), tuple(old))])
+        want[(tuple(new), tuple(new.values()))] += 1
+        assert _contents(lh, "ulabel") == want
+        before = _contents(lh, "artifact")
+        (prev,) = lh._registry_rows("artifact", key="flow/f.txt", is_latest=True)
+        bumped, jobs = _jobs(
+            spark, lambda: lh.register_artifact(_write(src, f"v{limit}"), key="flow/f.txt")
+        )
+        assert (jobs >= 1) == (limit == 0), limit
+        demoted = prev.asDict() | {"is_latest": False}
+        want = before - Counter([(tuple(prev.__fields__), tuple(prev))])
+        want[(tuple(demoted), tuple(demoted.values()))] += 1
+        got = _contents(lh, "artifact")
+        (added,) = got - want
+        assert added[1][added[0].index("uid")] == bumped["uid"]
+        assert sum(got.values()) == sum(want.values()) + 1 and not want - got
+
+
+def test_register_dir_families_on_both_paths(lakehouse, tmp_path, monkeypatch):
+    for limit in (lakehouse_mod._DRIVER_READ_MAX_BYTES, 0):
+        monkeypatch.setattr(lakehouse_mod, "_DRIVER_READ_MAX_BYTES", limit)
+        d = tmp_path / f"d{limit}"
+        d.mkdir()
+        for f in ("x", "y", "z"):
+            _write(d / f"{f}.txt", f"{f} {limit}")
+        first = {r["key"]: r for r in lakehouse.register_dir(str(d))}
+        for f in ("x", "y"):
+            _write(d / f"{f}.txt", f"{f} {limit} changed")
+        second = {r["key"]: r for r in lakehouse.register_dir(str(d))}
+        assert second[f"d{limit}/z.txt"]["uid"] == first[f"d{limit}/z.txt"]["uid"]
+        for f in ("x", "y"):
+            old, new = first[f"d{limit}/{f}.txt"], second[f"d{limit}/{f}.txt"]
+            assert new["uid"] == old["uid"][:16] + "0001"
+            heads = lakehouse._registry_rows("artifact", key=f"d{limit}/{f}.txt", is_latest=True)
+            assert [h["uid"] for h in heads] == [new["uid"]]
+        again = lakehouse.register_dir(str(d))
+        assert [r["uid"] for r in again] == [r["uid"] for r in second.values()]
+
+
+def test_driver_merge_survivors_stay_out_of_read_changes(spark, tmp_path):
+    from lamindb_spark.catalog.commitlog import history, read_changes
+
+    lh = _make(spark, str(tmp_path / "lake"), "commitlog")
+    rows = lh.save("ulabel", [{"name": f"m{i}"} for i in range(3)])
+    lh.save("ulabel", [{"uid": rows[1]["uid"], "name": "changed"}])
+    path = lh._table_path("ulabel")
+    top = history(path, lh.registry_log_store)[0]
+    meta = top["metadata"]
+    assert meta["op"] == "merge" and meta["key"] == "id"
+    assert meta["n_rewritten"] == 1 and len(meta["survivor_files"]) == 1
+    assert top["n_add"] == 2 and top["n_remove"] == 1
+    fed = read_changes(spark, path, top["version"] - 1, top["version"]).collect()
+    assert [(r["id"], r["name"]) for r in fed] == [(rows[1]["id"], "changed")]
+    names = sorted(r["name"] for r in lh._registry_rows("ulabel", name__startswith="m"))
+    assert names == ["m0", "m2"]
+
+
+def test_delete_and_replace_probe_on_both_paths(lake, tmp_path, monkeypatch):
+    lake, _made = lake
+    for limit in (lakehouse_mod._DRIVER_READ_MAX_BYTES, 0):
+        monkeypatch.setattr(lakehouse_mod, "_DRIVER_READ_MAX_BYTES", limit)
+        src = _write(tmp_path / f"r{limit}.txt", "first")
+        art = lake.register_artifact(src, key=f"probe/r{limit}.txt")
+        target = lake.artifact_path(art)
+        replaced = lake.replace_artifact(art["id"], _write(tmp_path / "new.txt", f"second {limit}"))
+        assert replaced["id"] == art["id"] and replaced["hash"] != art["hash"]
+        (row,) = lake._registry_rows("artifact", id=art["id"])
+        assert row["hash"] == replaced["hash"]
+        with open(target) as fh:
+            assert fh.read() == f"second {limit}"
+        with pytest.raises(KeyError):
+            lake.replace_artifact(10**9, src)
+        lake.delete_artifact(art["id"], permanent=True, storage=True)
+        assert not lake._registry_rows("artifact", id=art["id"])
+        assert not os.path.exists(target)
+        with pytest.raises(KeyError):
+            lake.delete_artifact(art["id"])

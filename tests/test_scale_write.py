@@ -154,30 +154,34 @@ def test_counter_survives_reopen(lakehouse, spark):
     assert reopened.next_id("ulabel") == top + 1
 
 
-def test_update_rewrites_only_touched_buckets(lakehouse):
+def test_update_rewrites_only_touched_buckets(lakehouse, monkeypatch):
     """VERDICT r02 #6: updating one row leaves every other id-bucket's
     files byte-identical AND untouched on disk (same inode paths, same
-    mtimes) — copy-on-write is bucket-scoped, not table-scoped."""
+    mtimes) — copy-on-write is bucket-scoped, not table-scoped. Holds
+    for the driver rewrite and, with the driver-read limit at 0, for
+    the Spark one."""
+    from lamindb_spark.catalog import lakehouse as lakehouse_mod
+
     seeded = lakehouse.save("ulabel", [{"name": f"s{i}"} for i in range(64)])
-    target = seeded[3]
     n_bkt = lakehouse.n_buckets
-    tbl = f"{lakehouse.root}/registries/ulabel"
-    before = {
-        f: os.path.getmtime(f) for f in _registry_files(lakehouse, "ulabel")
-    }
-    assert any(f"__bucket={target['id'] % n_bkt}/" in f for f in before)
-    lakehouse.save("ulabel", [{"uid": target["uid"], "name": "renamed"}])
-    after = {f: os.path.getmtime(f) for f in _registry_files(lakehouse, "ulabel")}
-    touched_dir = f"__bucket={target['id'] % n_bkt}/"
-    for f, mt in before.items():
-        if touched_dir in f:
-            assert f not in after, "touched bucket must be rewritten"
-        else:
-            assert after.get(f) == mt, f"untouched bucket file changed: {f}"
-    # content correct: one renamed row, same id, everything else intact
-    df = lakehouse.read_raw("ulabel")
-    assert df.filter(F.col("name") == "renamed").first()["id"] == target["id"]
-    assert df.filter(F.col("name").startswith("s")).count() == 63
+    for target, limit in ((seeded[3], lakehouse_mod._DRIVER_READ_MAX_BYTES), (seeded[6], 0)):
+        monkeypatch.setattr(lakehouse_mod, "_DRIVER_READ_MAX_BYTES", limit)
+        before = {
+            f: os.path.getmtime(f) for f in _registry_files(lakehouse, "ulabel")
+        }
+        assert any(f"__bucket={target['id'] % n_bkt}/" in f for f in before)
+        lakehouse.save("ulabel", [{"uid": target["uid"], "name": f"renamed{limit}"}])
+        after = {f: os.path.getmtime(f) for f in _registry_files(lakehouse, "ulabel")}
+        touched_dir = f"__bucket={target['id'] % n_bkt}/"
+        for f, mt in before.items():
+            if touched_dir in f:
+                assert f not in after, "touched bucket must be rewritten"
+            else:
+                assert after.get(f) == mt, f"untouched bucket file changed: {f}"
+        # content correct: one renamed row, same id, everything else intact
+        df = lakehouse.read_raw("ulabel")
+        assert df.filter(F.col("name") == f"renamed{limit}").first()["id"] == target["id"]
+    assert df.filter(F.col("name").startswith("s")).count() == 62
 
 
 def test_compaction_bounds_file_count(lakehouse):
