@@ -190,7 +190,7 @@ def test_to_dataframe_frames_equal(lake, spark, monkeypatch, caplog):
     qs = QuerySet(lh, "artifact")
     ops = [
         lambda: qs.to_dataframe(features=["species", "temperature", "flag", "note"]),
-        lambda: qs.filter(key__startswith="qd/").order_by("description").to_dataframe(
+        lambda: qs.filter(key__startswith="qd/").order_by("description", "-id").to_dataframe(
             features=["species"], limit=None
         ),
         lambda: qs.filter(key="nope").to_dataframe(features=["species"]),
@@ -201,6 +201,7 @@ def test_to_dataframe_frames_equal(lake, spark, monkeypatch, caplog):
     # a limit=None export keeps the set's order through the pivot join
     described = driver[1]["description"].fillna("").tolist()
     assert described == sorted(described) and described[0] == ""
+    assert driver[1]["id"].tolist()[:3] == sorted(driver[1]["id"].tolist()[:3], reverse=True)
     for d, f in zip(driver, forced):
         pd.testing.assert_frame_equal(d, f)
     first = driver[0]
