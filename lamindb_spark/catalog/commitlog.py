@@ -1000,10 +1000,10 @@ def merge_rows(
     add+remove. Every file is typed as ``rows``. Returns the committed
     version (-1 for no rows), or None without writing anything when
     the touched files total more than ``max_bytes``."""
-    log = CommitLog(table_path, store)
-    _, files = log.snapshot()
     if not rows.num_rows:
         return -1
+    log = CommitLog(table_path, store)
+    _, files = log.snapshot()
     keys = sorted({k for k in rows.column(key).to_pylist() if k is not None})
     spans, no_stats = _file_column_spans(files, key)
 

@@ -782,7 +782,7 @@ class Lakehouse:
             write_parquet(f"{path}/{rel}", [table], table.schema)
             self._cl_log(name).commit(add=[rel], metadata={"op": "append"})
         else:
-            table = _rows_table(schema, full)
+            table = _rows_table(schema, full)  # checks every row before any write
             self._ensure_bucketed(name)
             buckets = self._buckets(name, full)
             for k in sorted(set(buckets)):
