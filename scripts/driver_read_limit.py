@@ -1,8 +1,8 @@
-"""Time registry reads on the driver against the Spark scan, at a
-chosen registry size — the measurement behind
-``lakehouse._DRIVER_READ_MAX_BYTES``.
+"""Time registry reads (and, with ``--update``, rewrites) on the
+driver against Spark, at a chosen registry size — the measurement
+behind ``lakehouse._DRIVER_READ_MAX_BYTES``.
 
-    python scripts/driver_read_limit.py WORK_DIR ROWS [ROWS ...]
+    python scripts/driver_read_limit.py [--update] WORK_DIR ROWS [ROWS ...]
 
 For each ROWS it builds (once) a bucketed lake under WORK_DIR whose
 artifact registry holds that many synthetic rows in 16 files (about
@@ -15,10 +15,17 @@ prefix and EAV lookup match 90% of the rows: ``filter`` (``to_list``
 of their uids) and ``to_dataframe`` (the default 20-row export with
 the feature pivot) — and ``memory_mb`` (perfbench's Python peak RSS +
 JVM non-heap) before and after.
+
+``--update`` times the write side instead, each path on its own copy
+of the lake: ``save`` (a one-row ``save`` update of an existing uid,
+one bucket rewritten) and ``version`` (a ``register_artifact`` version
+bump of an existing key: the family read, the append and the
+``is_latest`` rewrite of the old head's bucket).
 """
 
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -111,24 +118,62 @@ def measure(spark, root, mode):
     }
     before = memory_mb(memory(spark))
     out = {"rows": n, "mode": mode, "bytes": sum(os.path.getsize(p) for p in files)}
-    for kind, op in ops.items():
-        op()
-        times = []
-        for _ in range(5):
-            t = time.perf_counter()
-            op()
-            times.append((time.perf_counter() - t) * 1e3)
-        out[f"{kind}_ms"] = round(statistics.median(times), 1)
+    _timed({kind: (lambda _i, op=op: op()) for kind, op in ops.items()}, out)
     out["memory_mb"] = [round(before, 1), round(memory_mb(memory(spark)), 1)]
     print(json.dumps(out), flush=True)
+
+
+def _timed(ops, out):
+    for kind, op in ops.items():
+        op(0)
+        times = []
+        for i in range(1, 6):
+            t = time.perf_counter()
+            op(i)
+            times.append((time.perf_counter() - t) * 1e3)
+        out[f"{kind}_ms"] = round(statistics.median(times), 1)
+
+
+def measure_update(spark, root, mode):
+    from harness import memory, memory_mb
+
+    from lamindb_spark.catalog import lakehouse as L
+
+    L._DRIVER_READ_MAX_BYTES = 0 if mode == "spark" else 1 << 40
+    work = f"{root}-update-{mode}"
+    shutil.rmtree(work, ignore_errors=True)
+    shutil.copytree(root, work)
+    lh = L.Lakehouse(spark, work)
+    lh.settings.creation.artifact_silence_missing_run_warning = True
+    files = L._visible_files(lh._table_path("artifact"))
+    one = lh.read_raw("artifact").filter("id = 1000").first()
+
+    def payload(i):
+        path = f"{work}/payload-{i}.txt"
+        with open(path, "w") as fh:
+            fh.write(f"{mode} version {i}")
+        return path
+
+    ops = {
+        "save": lambda i: lh.save("artifact", [{"uid": one["uid"], "description": f"d{i}"}]),
+        "version": lambda i: lh.register_artifact(payload(i), key=one["key"]),
+    }
+    before = memory_mb(memory(spark))
+    out = {"mode": mode, "op": "update", "bytes": sum(os.path.getsize(p) for p in files)}
+    _timed(ops, out)
+    out["memory_mb"] = [round(before, 1), round(memory_mb(memory(spark)), 1)]
+    print(json.dumps(out), flush=True)
+    shutil.rmtree(work, ignore_errors=True)
 
 
 def main(argv):
     from lamindb_spark.session import get_spark
 
     if argv[0] == "--measure":
-        measure(get_spark(), argv[1], argv[2])
+        {"read": measure, "update": measure_update}[argv[3]](get_spark(), argv[1], argv[2])
         return
+    kind = "update" if argv[0] == "--update" else "read"
+    argv = argv[1:] if kind == "update" else argv
     work, sizes = argv[0], [int(a) for a in argv[1:]]
     for n in sizes:
         root = os.path.join(work, f"lake_{n}")
@@ -137,7 +182,7 @@ def main(argv):
             build(spark, root, n)
             spark.stop()
         for mode in ("driver", "spark"):
-            subprocess.run([sys.executable, __file__, "--measure", root, mode], check=True)
+            subprocess.run([sys.executable, __file__, "--measure", root, mode, kind], check=True)
 
 
 if __name__ == "__main__":
