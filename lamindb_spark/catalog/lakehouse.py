@@ -169,6 +169,15 @@ def _group_feature_values(ann_rows) -> dict:
 #: rows): ``filter(...).to_list`` of 792k uids took 1.65 s against
 #: Spark's 5.95 s, the default 20-row ``to_dataframe`` with the pivot
 #: 1.40 s against 2.91 s, so 64 MiB is below that crossover too.
+#: Rewrites (``--update``, one run per path and size, the 16 files
+#: each touched by a 16-row update) cross over sooner, as one driver
+#: thread writes against four Spark ones. Bucketed ``save``: 1.49 s
+#: against Spark's 1.87 s at 63 MiB, 6.19 s against 4.50 s at 254 MiB,
+#: a crossover near 0.1 GiB of touched buckets. Commit-log
+#: ``merge_rows`` against ``merge_into``: 0.96 / 2.24 s at 62 MiB,
+#: 3.14 / 3.97 s at 250 MiB, 14.5 / 12.9 s at 993 MiB, a crossover
+#: near 0.5 GiB. So ``_update_buckets`` keeps the Spark rewrite for
+#: touched files over this limit, which sits below both crossovers.
 _DRIVER_READ_MAX_BYTES = 64 << 20
 
 
@@ -215,50 +224,37 @@ def _read_table_local(schema, files: list[str], columns: list[str], conds) -> pa
     read with pyarrow and typed as ``to_arrow_type`` of the registry
     schema (the types Spark's Arrow transfer uses). Each file's
     condition columns are read and masked first; only files with a
-    match pay the read of ``columns``. Both passes stream 8192-row
-    batches through a 64 KiB read buffer (no pre-buffered column
-    chunks), so the Arrow memory held at once is one batch, one page
-    and one dictionary per column, and the matched rows, whatever the
-    file size. A column missing from a file reads as null, as under
-    ``spark.read.schema(...)``. ``pq.read_table`` and
+    match pay the read of ``columns``. Both passes read through
+    ``commitlog.file_batches`` (the one per-file read rule: 8192-row
+    batches through a 64 KiB buffer, a missing column as nulls, as
+    under ``spark.read.schema(...)``), so the Arrow memory held at
+    once is one batch, one page and one dictionary per column, and the
+    matched rows, whatever the file size. ``pq.read_table`` and
     ``pyarrow.dataset`` stay unused: importing the latter costs tens
     of MB of driver memory."""
     types = _arrow_types(schema)
+    typed = lambda names: pa.schema([(c, types[c]) for c in dict.fromkeys(names)])
+    keys = typed(c for c, _op, _v in conds)
+    need = typed([*columns, *keys.names])
+
+    def mask(b):
+        m = None
+        for col, op, value in conds:
+            c = arrow_mask(op, b.column(col), value)
+            m = c if m is None else pc.and_(m, c)
+        return m
+
     out = []
     for path in files:
-        with pq.ParquetFile(
-            path, coerce_int96_timestamp_unit="us", buffer_size=1 << 16, pre_buffer=False
-        ) as pf:
-            present = set(pf.schema_arrow.names)
-
-            def column(b, name):
-                if name not in present:
-                    return pa.nulls(b.num_rows, types[name])
-                c = b.column(name)
-                return c if c.type == types[name] else c.cast(types[name])
-
-            def mask(b):
-                m = None
-                for col, op, value in conds:
-                    c = arrow_mask(op, column(b, col), value)
-                    m = c if m is None else pc.and_(m, c)
-                return m
-
-            def batches(cols):
-                return pf.iter_batches(batch_size=8192, columns=cols)
-
+        if conds and not any(pc.any(mask(b)).as_py() for b in file_batches(path, keys)):
+            continue
+        for b in file_batches(path, need):
             if conds:
-                keys = sorted({c for c, _op, _v in conds} & present)
-                if not any(pc.any(mask(b)).as_py() for b in batches(keys)):
+                b = b.filter(mask(b))
+                if not b.num_rows:
                     continue
-            need = dict.fromkeys([*columns, *(c for c, _op, _v in conds)])
-            for b in batches([c for c in need if c in present]):
-                if conds:
-                    b = b.filter(mask(b))
-                    if not b.num_rows:
-                        continue
-                out.append(pa.record_batch([column(b, c) for c in columns], names=columns))
-    return pa.Table.from_batches(out, pa.schema([(c, types[c]) for c in columns]))
+            out.append(b.select(columns))
+    return pa.Table.from_batches(out, typed(columns))
 
 
 def _table_values(schema, table: pa.Table) -> list[list]:
@@ -418,8 +414,9 @@ class Lakehouse:
     # touched bucket (one staged file plus an append commit on the
     # commit-log tier); updates stream the touched buckets (the
     # touched files, ``commitlog.merge_rows``) when they fit under the
-    # same byte limit, and otherwise rewrite them with Spark. Only a
-    # remote table path stages appends with Spark. Full rewrites
+    # same byte limit, and otherwise rewrite them with Spark, whose
+    # parallel writers win on large rewrites (see the constant). Only
+    # a remote table path stages appends with Spark. Full rewrites
     # (``_overwrite``: delete/restore/compaction) stay Spark jobs.
 
     #: id-hash fan-out per registry. 16 keeps small lakes readable;
@@ -1027,7 +1024,10 @@ class Lakehouse:
         8192-row batches, the updated ids dropped, the bucket's updates
         added, and the result written as a new bucket dir
         (``commitlog.merge_rows`` on the commit-log tier). Above the
-        limit, or with remote files, Spark rewrites them."""
+        limit, or with remote files, Spark rewrites them: past about
+        0.1 GiB of touched files (0.5 GiB on the commit-log tier) its
+        parallel writers beat the one driver thread (measured at the
+        constant)."""
         schema = REGISTRY_SCHEMAS[name]
         full = [{f.name: r.get(f.name) for f in schema.fields} for r in updates]
         path = self._table_path(name)
